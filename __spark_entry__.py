@@ -76,6 +76,11 @@ _PROVIDER_CLASSES = {
     "hdfs": "org.apache.spark.sql.execution.streaming.state."
     "HDFSBackedStateStoreProvider",
 }
+if _STREAM_STATE_PROVIDER not in _PROVIDER_CLASSES:
+    raise ValueError(
+        f"SPARK_GRAFT_STREAM_STATE_PROVIDER={_STREAM_STATE_PROVIDER!r} is not a "
+        f"state-store provider; use one of: {', '.join(sorted(_PROVIDER_CLASSES))}"
+    )
 
 
 def _stream_state_width(fn):

@@ -135,15 +135,6 @@ def _doc_shingle_sets(
     )
 
 
-def _doc_shingles(
-    docs: DataFrame, n: int, text_col: str, id_col: str
-) -> DataFrame:
-    """(id, shingle) exploded distinct shingle sets."""
-    return _doc_shingle_sets(docs, n, text_col, id_col).select(
-        F.col(id_col), F.explode("shingle_arr").alias("shingle")
-    )
-
-
 def jaccard_pairs(
     docs: DataFrame,
     n: int = 3,

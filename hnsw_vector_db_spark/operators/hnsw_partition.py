@@ -16,8 +16,20 @@ algorithm (Malkov & Yashunin, arXiv:1603.09320): geometric level
 assignment, greedy descent with ef=1 above the base layer, beam search at
 the base layer. It differs deliberately from the reference implementation:
 distances are evaluated as vectorized numpy batches over a neighbor
-frontier (not per-node scalar calls), vectors live in one contiguous
-matrix, and search state uses flat numpy visited masks.
+frontier (not per-node scalar calls) and vectors live in one contiguous
+matrix.
+
+Two search kernels share one beam-search rule. :meth:`LocalHNSW.search`
+runs one query with Python heaps and a ``set`` of visited nodes; inserts
+use it, and it is the reference the serving kernel is tested against.
+:meth:`LocalHNSW.search_batch` serves every query routed to a cell in
+lock step: per layer a padded ``(n, max_degree)`` adjacency matrix, a
+``(B, n)`` boolean visited mask and one ``(dist, node)``-sorted beam per
+query, and each iteration expands every live query's nearest unexpanded
+beam member at once. The queries go through in chunks whose visited
+masks stay under ``_VISITED_CHUNK_BYTES``. A query whose distances come
+within rounding error of a tie is answered by ``search`` instead, so
+both kernels return the same nodes in the same order.
 
 Connectivity guarantee (the reference's documented stranded-edge defect,
 `core/hnsw/graph.py:158-168` re-prune and `:191-207` delete, does NOT
@@ -42,6 +54,32 @@ import heapq
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# Byte bound on the (B, n) visited masks of one search_batch chunk: a
+# cell of n nodes serves max(1, _VISITED_CHUNK_BYTES // n) queries at a
+# time.
+_VISITED_CHUNK_BYTES = 16 * 1024 * 1024
+
+
+def _pad_layers(n: int, n_layers: int, la, sa, da) -> list[np.ndarray]:
+    """Per-layer ``(n, max_degree)`` int64 neighbor matrices, -1 padded,
+    each row in its adjacency-list order, from flat (layer, src, dst)
+    edge arrays listed in that order."""
+    la = np.asarray(la, dtype=np.int64)
+    sa = np.asarray(sa, dtype=np.int64)
+    da = np.asarray(da, dtype=np.int64)
+    order = np.lexsort((sa, la))  # stable: keeps each list's own order
+    la, sa, da = la[order], sa[order], da[order]
+    key = la * max(n, 1) + sa
+    pos = np.arange(len(key)) - np.searchsorted(key, key, side="left")
+    out = []
+    for lv in range(n_layers):
+        on = la == lv
+        width = int(pos[on].max()) + 1 if on.any() else 0
+        A = np.full((n, width), -1, dtype=np.int64)
+        A[sa[on], pos[on]] = da[on]
+        out.append(A)
+    return out
 
 
 class LocalHNSW:
@@ -81,6 +119,9 @@ class LocalHNSW:
         # case — nearest-full fallback, cap then exceeded by 1 per such
         # child, which needs every one of its m0 nearest hubs saturated).
         self.prot_fanin: dict[int, int] = {}
+        # padded per-layer adjacency for search_batch; None until first
+        # use and after every graph change
+        self._pad: list[np.ndarray] | None = None
 
     # -- distance: batch row-block vs one query ---------------------------
     def _dist(self, q: np.ndarray, idx: np.ndarray) -> np.ndarray:
@@ -91,6 +132,19 @@ class LocalHNSW:
         if self.metric == "dot_product":
             return -(block @ q)
         diff = block - q
+        if self.metric == "manhattan":
+            return np.abs(diff).sum(axis=1)
+        return np.sqrt((diff * diff).sum(axis=1))  # euclidean
+
+    def _dist_pairs(self, Q: np.ndarray, idx: np.ndarray) -> np.ndarray:
+        """Distance from each query row ``Q[p]`` to node ``idx[p]``:
+        :meth:`_dist` for many (query, node) pairs at once."""
+        block = self.X[idx]
+        if self.metric == "cosine":
+            return 1.0 - np.einsum("pd,pd->p", block, Q)
+        if self.metric == "dot_product":
+            return -np.einsum("pd,pd->p", block, Q)
+        diff = block - Q
         if self.metric == "manhattan":
             return np.abs(diff).sum(axis=1)
         return np.sqrt((diff * diff).sum(axis=1))  # euclidean
@@ -144,6 +198,7 @@ class LocalHNSW:
         self.entry = 0
         self.protected0 = set()
         self.prot_fanin = {}
+        self._pad = None
         for i in range(n):
             self._insert(i)
 
@@ -231,6 +286,7 @@ class LocalHNSW:
         top_needed = int(self.levels.max())
         while len(self.adj) <= top_needed:
             self.adj.append(dict())
+        self._pad = None
         for i in range(n0, n0 + k_new):
             self._insert(i)
 
@@ -250,6 +306,158 @@ class LocalHNSW:
             ep = [self._search_level(q, ep, 1, lv)[0][1]]
         res = self._search_level(q, ep, ef, 0)
         return [(n, d) for d, n in res[:k]]
+
+    def _layers(self) -> list[np.ndarray]:
+        """Padded adjacency matrices (:func:`_pad_layers`) of this graph."""
+        if self._pad is None:
+            st = self.to_state()
+            self._pad = _pad_layers(
+                st["n"], len(self.adj), st["e_layer"], st["e_src"], st["e_dst"]
+            )
+        return self._pad
+
+    def _beam_batch(
+        self, Q: np.ndarray, entry: np.ndarray, ef: int, A: np.ndarray,
+        tol: np.ndarray, tied: np.ndarray,
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """:meth:`_search_level` for every row of ``Q`` in lock step, each
+        row from its own single entry node over the adjacency matrix ``A``.
+
+        Returns the beams, ``(B, min(ef, n))`` nodes (-1 padded) and
+        distances (inf padded), sorted by ``(dist, node)``. A row whose
+        distances come within ``tol`` of one another is flagged in
+        ``tied`` and dropped: its sequential result turns on ties, or on
+        the last bits of differently summed dot products, so only
+        ``search`` reproduces it.
+
+        Why the lock step equals the heap loop: the sequential beam is the
+        ``ef`` nearest of every node admitted so far, and a candidate is
+        admitted iff fewer than ``ef`` of the beam and of the candidates
+        evaluated before it in the same expansion lie at or below its
+        distance (the ef-th smallest of that multiset is the beam's worst
+        distance at its turn). With no ties, every node the frontier heap
+        pops before the stop rule fires is the nearest unexpanded beam
+        member, and the loop stops when there is none.
+        """
+        B, n = len(Q), self.X.shape[0]
+        W = min(ef, n)
+        out_n = np.full((B, W), -1, dtype=np.int64)
+        out_d = np.full((B, W), np.inf)
+        rows = np.flatnonzero(~tied)  # state below holds these rows only
+        Q, tol, entry = Q[rows], tol[rows], entry[rows]
+        L = len(rows)
+        bd = np.full((L, W), np.inf)
+        bn = np.full((L, W), -1, dtype=np.int64)
+        done = np.ones((L, W), dtype=bool)  # expanded, or an empty slot
+        bd[:, 0] = self._dist_pairs(Q, entry)
+        bn[:, 0] = entry
+        done[:, 0] = False
+        visited = np.zeros((L, n), dtype=bool)
+        visited[np.arange(L), entry] = True
+        while L:
+            j = np.argmin(done, axis=1)  # nearest unexpanded member
+            stop = done[np.arange(L), j]  # none left
+            if stop.any():
+                out_n[rows[stop]], out_d[rows[stop]] = bn[stop], bd[stop]
+                go = ~stop
+                rows, Q, tol, j = rows[go], Q[go], tol[go], j[go]
+                bd, bn, done, visited = bd[go], bn[go], done[go], visited[go]
+                L = len(rows)
+                if not L:
+                    break
+            ar = np.arange(L)
+            done[ar, j] = True
+            nbr = A[bn[ar, j]]
+            fresh = nbr >= 0
+            fresh &= ~visited[ar[:, None], np.where(fresh, nbr, 0)]
+            m = int(fresh.sum(axis=1).max()) if fresh.size else 0
+            if m == 0:
+                continue
+            # each row's fresh neighbors, packed left in adjacency order
+            r, c = np.nonzero(fresh)
+            slot = (np.cumsum(fresh, axis=1) - 1)[r, c]
+            cand = nbr[r, c]
+            visited[r, cand] = True
+            d = np.full((L, m), np.inf)
+            d[r, slot] = self._dist_pairs(Q[r], cand)
+            cn = np.full((L, m), -1, dtype=np.int64)
+            cn[r, slot] = cand
+            # beam and candidates sorted together: a near tie is two
+            # neighbors in that order, and a candidate's rank counts the
+            # beam members and candidates nearer than it
+            K = W + m
+            md = np.concatenate([bd, d], axis=1)
+            flat = np.argsort(md, axis=1, kind="stable") + (ar * K)[:, None]
+            sd = md.ravel()[flat]
+            with np.errstate(invalid="ignore"):  # inf - inf
+                near = (np.diff(sd, axis=1) <= tol[:, None]).any(axis=1)
+            rank = np.empty(L * K, dtype=np.int64)
+            rank[flat.ravel()] = np.tile(np.arange(K), L)
+            later = np.triu(d[:, None, :] < d[:, :, None], 1).sum(axis=2)
+            admit = (cn >= 0) & (rank.reshape(L, K)[:, W:] - later < ef)
+            kept = np.concatenate([bn >= 0, admit], axis=1).ravel()[flat]
+            pos = np.cumsum(kept, axis=1) - 1
+            kept &= pos < W
+            kr, kc = np.nonzero(kept)
+            src, dst = flat[kr, kc], kr * W + pos[kr, kc]
+            bd.ravel()[dst] = sd[kr, kc]
+            bn.ravel()[dst] = np.concatenate([bn, cn], axis=1).ravel()[src]
+            done.ravel()[dst] = np.concatenate(
+                [done, np.zeros((L, m), dtype=bool)], axis=1
+            ).ravel()[src]
+            if near.any():
+                tied[rows[near]] = True
+                go = ~near
+                rows, Q, tol = rows[go], Q[go], tol[go]
+                bd, bn, done, visited = bd[go], bn[go], done[go], visited[go]
+                L = len(rows)
+        return out_n, out_d
+
+    def search_batch(
+        self, Q: np.ndarray, k: int, ef: int = 64
+    ) -> tuple[np.ndarray, np.ndarray]:
+        """:meth:`search` for every row of ``Q`` at once.
+
+        Returns ``(nodes, dists)``, each ``(B, min(k, n))``: row ``b``
+        holds ``search(Q[b], k, ef)`` in order, padded with -1 / inf when
+        the beam found fewer than ``k`` nodes. Node ids are always equal
+        to ``search``'s; distances agree to rounding error (summation
+        order differs from the one-query BLAS call).
+        """
+        Q = np.asarray(Q, dtype=np.float64)
+        n = 0 if self.X is None else len(self.X)
+        kk = min(k, n)
+        nodes = np.full((len(Q), kk), -1, dtype=np.int64)
+        dists = np.full((len(Q), kk), np.inf)
+        if not n or not len(Q):
+            return nodes, dists
+        Qs = Q
+        if self.metric == "cosine":  # row by row, exactly as search() does
+            Qs = np.array([q / nq if (nq := np.linalg.norm(q)) > 0 else q for q in Q])
+        ef = max(ef, k)
+        A = self._layers()
+        top = int(self.levels[self.entry])
+        # bound on |_dist_pairs - _dist|: both sum dim products of size at
+        # most |x|_1 |q|_1 (L1 norms bound every metric's terms)
+        eps = np.finfo(np.float64).eps
+        x1 = float(np.abs(self.X).sum(axis=1).max())
+        tol = 4 * self.X.shape[1] * eps * (1 + np.abs(Qs).sum(axis=1)) * (1 + x1)
+        step = max(1, _VISITED_CHUNK_BYTES // n)
+        for s in range(0, len(Q), step):
+            Qc, tc = Qs[s:s + step], tol[s:s + step]
+            tied = np.zeros(len(Qc), dtype=bool)
+            ep = np.full(len(Qc), self.entry, dtype=np.int64)
+            for lv in range(top, 0, -1):
+                ep = self._beam_batch(Qc, ep, 1, A[lv], tc, tied)[0][:, 0]
+            bn, bd = self._beam_batch(Qc, ep, ef, A[0], tc, tied)
+            nodes[s:s + step] = bn[:, :kk]
+            dists[s:s + step] = bd[:, :kk]
+            for b in s + np.flatnonzero(tied):
+                res = self.search(Q[b], k, ef)
+                nodes[b], dists[b] = -1, np.inf
+                nodes[b, : len(res)] = [node for node, _ in res]
+                dists[b, : len(res)] = [dist for _, dist in res]
+        return nodes, dists
 
     # -- serialization: build once, search many ---------------------------
     def to_state(self) -> dict:
@@ -327,6 +535,7 @@ class LocalHNSW:
         da = np.asarray(e_dst, dtype=np.int64)
         top = int(idx.levels.max()) if n else 0
         idx.adj = [dict() for _ in range(top + 1)]
+        idx._pad = _pad_layers(n, top + 1, la, sa, da)
         if len(la):
             order = np.lexsort((sa, la))
             la, sa, da = la[order], sa[order], da[order]
@@ -377,7 +586,7 @@ def hnsw_build(
 
     ensure_package_shipped(assigned.sparkSession)
 
-    def per_cell(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(key, pdf):
         if pdf.empty:
             return pd.DataFrame(
                 columns=[
@@ -751,9 +960,8 @@ def _route_cells(
 ) -> np.ndarray:
     """nprobe nearest cell ids per query row, (B, nb) int array. ONE
     (B x dim) @ (dim x n_cells) matmul + one stable argsort per call —
-    deterministic min-cell-id tiebreak. Shared by the executor-side
-    (:func:`assign_query_cells`) and driver-side (:func:`hnsw_search`)
-    routing paths so the two are bit-identical by construction."""
+    deterministic min-cell-id tiebreak. :func:`hnsw_search` routes its
+    collected query batch with it on the driver."""
     nb = min(nprobe, C.shape[0])
     if metric == "cosine":
         cn = np.linalg.norm(C, axis=1, keepdims=True)
@@ -765,46 +973,6 @@ def _route_cells(
         # argsort of ||c||^2 - 2 c.q == argsort of euclidean dist
         D = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
     return np.argsort(D, axis=1, kind="stable")[:, :nb]
-
-
-def assign_query_cells(
-    queries: DataFrame,
-    centroids: np.ndarray,
-    nprobe: int = 4,
-    metric: str = "cosine",
-    query_id_col: str = "query_id",
-    query_vec_col: str = "query_vec",
-) -> DataFrame:
-    """Route each query to its nprobe nearest cells (exploded rows).
-    Centroids ride into executors as plain captured numpy (small).
-
-    Vectorized per Arrow batch via :func:`_route_cells` — no per-row
-    Python loop (the same BLAS-block shape ``knn_batch_twophase``
-    uses)."""
-    import pandas as pd
-
-    from hnsw_vector_db_spark.session import ensure_package_shipped
-
-    ensure_package_shipped(queries.sparkSession)
-    C = np.asarray(centroids, dtype=np.float64)
-    nb = min(nprobe, C.shape[0])
-
-    def route(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            Q = np.vstack(pdf[query_vec_col].to_numpy()).astype(np.float64)
-            cells = _route_cells(Q, C, nprobe, metric)  # (B, nb)
-            yield pd.DataFrame(
-                {
-                    query_id_col: pdf[query_id_col].to_numpy().repeat(nb),
-                    query_vec_col: pdf[query_vec_col].to_numpy().repeat(nb),
-                    "cell": cells.reshape(-1),
-                }
-            )
-
-    schema = f"{query_id_col} long, {query_vec_col} array<float>, cell int"
-    return queries.select(query_id_col, query_vec_col).mapInPandas(route, schema)
 
 
 def hnsw_search(
@@ -829,18 +997,27 @@ def hnsw_search(
     beam search. The reference builds once and searches many
     (`core/hnsw/graph.py:127-189`); this is that lifecycle on Spark.
 
-    Output (query_id, vec_id, dist, rank). The cogroup shuffles the index
-    one row per cell and the routed queries once on cell id; per-cell
+    Output (query_id, vec_id, dist, rank). Each cell answers all of its
+    routed queries in one :meth:`LocalHNSW.search_batch` call (the same
+    results as one :meth:`LocalHNSW.search` per query); per-cell
     candidate output is nprobe*k rows per query, so the final rank window
     is tiny.
+
+    Partitioning: both cogroup inputs are hash-repartitioned on ``cell``
+    to ``max(1, min(probed cells, defaultParallelism))`` partitions. The
+    cogroup's clustering is then already met, so no further exchange is
+    planned, and AQE does not coalesce a repartition with an explicit
+    count: the CPU-bound per-cell searches run on every core even though
+    their shuffle is small (left to AQE, a 2 MB shuffle became 2 tasks
+    on 4 cores).
 
     Probed-cell pushdown: the query batch is collected ONCE (bounded by
     ``max_collect_queries`` — exceeding it fails fast with guidance
     rather than silently turning a cogroup into a driver OOM) and routed
     DRIVER-SIDE against the local centroid matrix (:func:`_route_cells`
-    — zero extra Spark jobs; the executor-side
-    :func:`assign_query_cells` shares the same function so routing is
-    bit-identical). The union of probed cells — at most n_queries *
+    — zero extra Spark jobs). The routed (query, cell) relation is built
+    from numpy arrays as one Arrow table (query vectors as
+    ``array<float>``), not from pickled Python rows. The union of probed cells — at most n_queries *
     nprobe ids — is pushed as an ``isin`` filter on the index BEFORE the
     cogroup, so the index scan touches only the probed cells' rows, and
     the cogroup consumes the SAME literal routing the filter was derived
@@ -881,23 +1058,34 @@ def hnsw_search(
             f"got > {max_collect_queries} queries. Chunk the batch and union "
             f"results, or pass max_collect_queries= explicitly."
         )
-    C = np.asarray(centroids, dtype=np.float64)
-    nb = min(nprobe, C.shape[0])
+    schema = f"{query_id_col} long, {query_vec_col} array<float>, cell int"
     if qin:
+        import pyarrow as pa
+
         Q = np.array([list(r[query_vec_col]) for r in qin], dtype=np.float64)
-        cells = _route_cells(Q, C, nprobe, metric)  # (B, nb)
-        lit_rows = [
-            (r[query_id_col], list(r[query_vec_col]), int(cells[i, j]))
-            for i, r in enumerate(qin)
-            for j in range(nb)
-        ]
+        cells = _route_cells(Q, np.asarray(centroids, dtype=np.float64), nprobe, metric)
+        nb, dim = cells.shape[1], Q.shape[1]
+        probed = np.unique(cells).tolist()
+        qids = np.array([r[query_id_col] for r in qin], dtype=np.int64)
+        flat = np.repeat(Q.astype(np.float32), nb, axis=0).reshape(-1)
+        qcells = spark.createDataFrame(
+            pa.table(
+                {
+                    query_id_col: np.repeat(qids, nb),
+                    query_vec_col: pa.ListArray.from_arrays(
+                        np.arange(0, flat.size + 1, dim, dtype=np.int32), flat
+                    ),
+                    "cell": cells.reshape(-1).astype(np.int32),
+                }
+            ),
+            schema,
+        )
     else:
-        lit_rows = []
-    probed = sorted({c for _, _, c in lit_rows})
-    qcells = spark.createDataFrame(
-        lit_rows, f"{query_id_col} long, {query_vec_col} array<float>, cell int"
-    )
-    index = index.filter(F.col("cell").isin(probed))
+        probed = []
+        qcells = spark.createDataFrame([], schema)
+    parts = max(1, min(len(probed), spark.sparkContext.defaultParallelism))
+    index = index.filter(F.col("cell").isin(probed)).repartition(parts, "cell")
+    qcells = qcells.repartition(parts, "cell")
 
     # filtered search over-fetches per cell so enough admissible
     # candidates survive the post-traversal semi-join
@@ -914,13 +1102,18 @@ def hnsw_search(
             st.get("e_prot"),  # None for legacy pre-e_prot artifacts
         )
         ids = np.asarray(st["ids"], dtype=np.int64)
-        rows = []
-        for qid, qvec in zip(q_pdf[query_id_col], q_pdf[query_vec_col]):
-            for loc, dist in local.search(
-                np.asarray(qvec, dtype=np.float64), k_fetch, ef_eff
-            ):
-                rows.append((qid, int(ids[loc]), float(dist)))
-        return pd.DataFrame(rows, columns=[query_id_col, id_col, "dist"])
+        Q = np.vstack(q_pdf[query_vec_col].to_numpy()).astype(np.float64)
+        nodes, dists = local.search_batch(Q, k_fetch, ef_eff)
+        hit = nodes >= 0  # each row's hits come first, nearest first
+        return pd.DataFrame(
+            {
+                query_id_col: np.repeat(
+                    q_pdf[query_id_col].to_numpy(dtype=np.int64), hit.sum(axis=1)
+                ),
+                id_col: ids[nodes[hit]],
+                "dist": dists[hit],
+            }
+        )
 
     out_schema = f"{query_id_col} long, {id_col} long, dist double"
     candidates = (

@@ -336,17 +336,6 @@ def knn_auto(
     return knn_batch_twophase(queries, vectors, k=k, metric=metric, **kw)
 
 
-def knn_join(
-    queries: DataFrame,
-    vectors: DataFrame,
-    k: int = 10,
-    metric: str = "cosine",
-    **kw,
-) -> DataFrame:
-    """Alias of knn_batch with join naming — the vector-native 'top-k join'."""
-    return knn_batch(queries, vectors, k=k, metric=metric, **kw)
-
-
 def hard_negatives(
     queries: DataFrame,
     vectors: DataFrame,

@@ -38,17 +38,8 @@ from hnsw_vector_db_spark.functions.distance import (
     dot_raw,
     lit_double_array,
     lit_long_array,
-    norm,
     select_normalized,
 )
-
-
-def cosine_sim(a, b) -> F.Column:
-    """Cosine similarity (higher=closer), zero-norm -> 0."""
-    na, nb = norm(a), norm(b)
-    return F.when((na == 0.0) | (nb == 0.0), F.lit(0.0)).otherwise(
-        dot_raw(a, b) / (na * nb)
-    )
 
 
 # Cap on the collected right side for the Arrow pairwise kernel:

@@ -15,10 +15,6 @@ def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
-
-
 def shuffle_count(df: DataFrame) -> int:
     """Number of exchanges in the physical plan — the scale metric that
     matters most; assert it doesn't regress."""

@@ -79,6 +79,25 @@ def test_oracle_parity(spark, name):
     assert not problems, f"{name}: {problems[:3]}"
 
 
+def test_bad_stream_state_provider_fails_at_import():
+    """An unknown SPARK_GRAFT_STREAM_STATE_PROVIDER stops the import with
+    an error naming the valid providers."""
+    import os
+    import subprocess
+    from pathlib import Path
+
+    done = subprocess.run(
+        [sys.executable, "-c", "import __spark_entry__"],
+        cwd=Path(__file__).resolve().parents[1],
+        env=dict(os.environ, SPARK_GRAFT_STREAM_STATE_PROVIDER="leveldb"),
+        capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode != 0
+    last = done.stderr.strip().splitlines()[-1]
+    assert last.startswith("ValueError") and "'leveldb'" in last, done.stderr[-500:]
+    assert "rocksdb" in last and "hdfs" in last
+
+
 def test_doc_counts_match_live_dicts():
     """README's stated query/oracle/test counts are DERIVED numbers —
     this test parses them back against the live dicts so drift fails CI

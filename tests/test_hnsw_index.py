@@ -14,8 +14,10 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hnsw_vector_db_spark.operators import hnsw_partition
 from hnsw_vector_db_spark.operators.hnsw_partition import (
     LocalHNSW,
+    _route_cells,
     hnsw_build,
     hnsw_edges,
     hnsw_search,
@@ -53,6 +55,100 @@ def test_state_roundtrip_search_identical():
         a = built.search(X[qi], 5, ef=48)
         b = loaded.search(X[qi], 5, ef=48)
         assert a == b
+
+
+def _assert_batch_equals_search(idx, Q, k, ef):
+    """search_batch row b == search(Q[b]): same nodes in the same order,
+    distances to 1e-12."""
+    nodes, dists = idx.search_batch(Q, k, ef)
+    assert nodes.shape == dists.shape == (len(Q), min(k, len(idx.X)))
+    for b, q in enumerate(Q):
+        want = idx.search(q, k, ef)
+        assert [int(x) for x in nodes[b] if x >= 0] == [n for n, _ in want]
+        np.testing.assert_allclose(
+            dists[b, : len(want)], [d for _, d in want], rtol=0, atol=1e-12
+        )
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot_product", "euclidean", "manhattan"])
+def test_search_batch_equals_search(metric, monkeypatch):
+    """The lock-step serving kernel answers exactly like the per-query
+    beam search: on a plain cell (without handing any query back to
+    search), on a reloaded index (adjacency rebuilt from the stored edge
+    arrays), with ef >= n, with k > n, over duplicate vectors whose
+    distances tie, on a one-node cell, and in several visited-mask
+    chunks."""
+    rng = np.random.RandomState(3)
+    idx = LocalHNSW(m=6, ef_construction=32, metric=metric)
+    idx.build(rng.randn(150, 16))
+    Q = rng.randn(60, 16)
+
+    handed_back = []
+    search = idx.search
+    monkeypatch.setattr(idx, "search", lambda *a: handed_back.append(a) or search(*a))
+    idx.search_batch(Q, 10, 24)
+    assert handed_back == []
+    monkeypatch.undo()
+
+    _assert_batch_equals_search(idx, Q, 10, 24)
+    st = idx.to_state()
+    loaded = LocalHNSW.from_state(
+        st["n"], st["dim"], st["metric"], st["entry"], st["levels"],
+        st["vec_bytes"], st["e_layer"], st["e_src"], st["e_dst"], st["e_prot"],
+    )
+    _assert_batch_equals_search(loaded, Q, 10, 24)
+    _assert_batch_equals_search(idx, Q, 5, 400)  # ef >= n
+    _assert_batch_equals_search(idx, Q, 200, 8)  # k > n
+
+    X = np.repeat(rng.randn(30, 16), 4, axis=0)
+    dup = LocalHNSW(m=6, ef_construction=32, metric=metric)
+    dup.build(X[rng.permutation(len(X))])
+    _assert_batch_equals_search(dup, np.vstack([X[:20], rng.randn(20, 16)]), 10, 16)
+
+    one = LocalHNSW(metric=metric)
+    one.build(rng.randn(1, 16))
+    _assert_batch_equals_search(one, Q[:5], 3, 8)
+
+    # 7 queries per chunk: the 60 queries run in 9 chunks
+    monkeypatch.setattr(hnsw_partition, "_VISITED_CHUNK_BYTES", 7 * 150)
+    _assert_batch_equals_search(idx, Q, 10, 24)
+
+
+def test_hnsw_build_warns_nothing_about_type_hints(fitted):
+    """applyInPandas gets an un-hinted function, so PySpark has no eval
+    type to (fail to) infer from hints."""
+    import warnings
+
+    assigned, _, _ = fitted
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        assert hnsw_build(assigned).count() > 0
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
+def test_hnsw_search_cogroup_runs_at_full_parallelism(spark, fitted, tmp_path):
+    """Both cogroup inputs are repartitioned on cell to min(probed cells,
+    defaultParallelism) partitions, and AQE leaves that count alone: no
+    coalesced shuffle read anywhere below the cogroup."""
+    import re
+
+    from hnsw_vector_db_spark.plans.explain import physical_plan
+
+    assigned, centroids, queries = fitted
+    path = str(tmp_path / "hnsw_index")
+    hnsw_build(assigned).write.parquet(path)
+    index = spark.read.parquet(path)
+    Q = np.array([r["query_vec"] for r in queries.collect()], dtype=np.float64)
+    probed = len(np.unique(_route_cells(Q, centroids, 2, "cosine")))
+    parts = min(probed, spark.sparkContext.defaultParallelism)
+
+    out = hnsw_search(index, queries, centroids, k=5, nprobe=2)
+    assert len(out.collect()) == 5 * len(Q)
+    final = physical_plan(out).split("== Initial Plan ==")[0]
+    cogroup = final[final.index("FlatMapCoGroupsInPandas"):]
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", cogroup)
+    assert exchanges == [("cell", str(parts), "REPARTITION_BY_NUM")] * 2, cogroup
+    assert "AQEShuffleRead" not in cogroup, cogroup
 
 
 def test_build_once_search_many(spark, fitted, tmp_path):
