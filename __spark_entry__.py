@@ -2969,12 +2969,13 @@ def q_audio_spectral(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_spectral_features,
         encode_wav,
     )
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(spark)
     rate, n = 8000, 2048
 
     def synth(batches):
+        install_zip_guard()
         import numpy as np
 
         t = np.arange(n) / rate
@@ -3031,11 +3032,12 @@ def q_image_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
     from hnsw_vector_db_spark.operators.multimodal import image_meta
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(spark)
 
     def synth(batches):
+        install_zip_guard()
         from hnsw_vector_db_spark.operators.multimodal import encode_jpeg_stub
 
         for pdf in batches:
@@ -4452,6 +4454,25 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
+def _split_write_files(root: str, col: str, values) -> list[list[str]]:
+    """The parquet files of each expected partition of a ``partitionBy``
+    split write under ``root``, in ``values`` order. A partition whose
+    rows were all absent gets no directory; raise instead of letting that
+    micro-batch silently vanish from the stream."""
+    import glob as _glob
+
+    out = []
+    for v in values:
+        files = sorted(_glob.glob(f"{root}/{col}={v}/*.parquet"))
+        if not files:
+            raise RuntimeError(
+                f"split write left no parquet file in {root}/{col}={v}: "
+                f"that micro-batch would be empty"
+            )
+        out.append(files)
+    return out
+
+
 @_stream_state_width
 def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING incremental dedup run to completion
@@ -4489,10 +4510,8 @@ def q_stream_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _os.makedirs(f"{work}/src", exist_ok=True)
     first = set()
-    for b in (0, 5):
-        for i, f in enumerate(
-            sorted(_glob.glob(f"{work}/parts/_b={b}/*.parquet"))
-        ):
+    for b, files in zip((0, 5), _split_write_files(f"{work}/parts", "_b", (0, 5))):
+        for i, f in enumerate(files):
             dst = f"{work}/src/b{b}-{i}.parquet"
             _os.rename(f, dst)
             if b == 0:
@@ -7743,11 +7762,14 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one setup job, not two: the median cut and max watermark sentinel
     # come from the same aggregate scan (r12, guide §1.2 — don't pay a
     # second full pass for a second scalar)
+    # the max is collected as epoch microseconds: a collected timestamp
+    # is a naive datetime in the driver process's local zone, which the
+    # UTC sentinel below would misread off a UTC host
     _cut_row = ev.agg(
         F.expr("percentile(cast(ts as double), 0.5)").alias("_cut"),
-        F.max("ts").alias("_mx"),
+        F.unix_micros(F.max("ts")).alias("_mx_us"),
     ).collect()[0]
-    cut, max_ts = _cut_row["_cut"], _cut_row["_mx"]
+    cut, max_us = _cut_row["_cut"], _cut_row["_mx_us"]
     work = tempfile.mkdtemp(prefix="stream_sess_")
     # r13 (guide §1.2): ONE split write instead of two filtered scans —
     # a single task partitions the stream into half=0/half=1 files, which
@@ -7764,15 +7786,12 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _os.makedirs(f"{work}/src", exist_ok=True)
     first, second = set(), set()
-    for half, bucket in ((0, first), (1, second)):
-        for i, f in enumerate(
-            sorted(_glob.glob(f"{work}/parts/_half={half}/*.parquet"))
-        ):
+    halves = _split_write_files(f"{work}/parts", "_half", (0, 1))
+    for half, bucket, files in zip((0, 1), (first, second), halves):
+        for i, f in enumerate(files):
             dst = f"{work}/src/half{half}-{i}.parquet"
             _os.rename(f, dst)
             bucket.add(dst)
-    import datetime as _dt
-
     # the 1-row far-future sentinel is written driver-side (pyarrow) —
     # no Spark job for one row
     import pyarrow as _pa
@@ -7783,7 +7802,7 @@ def q_stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             {
                 "user_id": _pa.array([-1], type=_pa.int64()),
                 "ts": _pa.array(
-                    [max_ts + _dt.timedelta(days=30)],
+                    [max_us + 30 * 86_400_000_000],  # + 30 days
                     type=_pa.timestamp("us", tz="UTC"),
                 ),
                 "value": _pa.array([0.0], type=_pa.float64()),

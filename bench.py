@@ -19,6 +19,20 @@ the living baseline. Each query runs after a warmup query primes the
 JVM/parquet footers; the timed action is a NOOP-SINK WRITE (full plan
 execution with every output column materialized — count() lets Catalyst
 prune projection work; BASELINE.md "bench action correction").
+
+Per-query profile (``--profile``): for each named query it reports,
+separately, ``build_s`` (time for queries()[name](spark, sf_dir) to
+return; eager entries do their work here), ``plan_s`` (physical
+planning of the returned frame), ``exec1_s`` (first noop-sink run,
+codegen JIT included) and ``run2_total_s`` (a fresh build plus noop-sink
+run after clearCache, the protocol above). It prints one indented JSON
+object and writes nothing else. It reads the data from
+$SPARK_GRAFT_SF_DIR, which it requires.
+
+    SPARK_GRAFT_SF_DIR=<sf_dir> python bench.py --profile <query> [<query> ...]
+    python bench.py --profile --plans <outdir> [--suffix S] <query> ...
+        # also save explain("formatted") to <outdir>/<query>_<S>.txt
+        # (S defaults to "before")
 """
 
 from __future__ import annotations
@@ -377,5 +391,64 @@ def main() -> None:
     spark.stop()
 
 
+def profile(argv: list[str]) -> None:
+    """``--profile`` mode (see the module docstring)."""
+    import argparse
+
+    ap = argparse.ArgumentParser(prog="bench.py --profile")
+    ap.add_argument("names", nargs="+", metavar="query")
+    ap.add_argument("--plans", metavar="outdir")
+    ap.add_argument("--suffix", default="before")
+    args = ap.parse_args(argv)
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR")
+    if not sf_dir:
+        ap.error("set SPARK_GRAFT_SF_DIR to the scale-factor directory to profile")
+    if args.plans:
+        os.makedirs(args.plans, exist_ok=True)
+    spark = get_spark(
+        "bench_profile", **{"spark.ui.showConsoleProgress": "false"}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    queries = entry_mod.queries()
+    queries["vector_stats"](spark, sf_dir).count()  # warmup
+
+    out = {}
+    for name in args.names:
+        fn = queries[name]
+        spark.catalog.clearCache()
+        spark.sparkContext.setJobDescription(f"profile:{name}")
+        t0 = time.time()
+        df = fn(spark, sf_dir)
+        t1 = time.time()
+        _ = df._jdf.queryExecution().executedPlan()
+        t2 = time.time()
+        df.write.format("noop").mode("overwrite").save()
+        t3 = time.time()
+        if args.plans:
+            plan_txt = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted"
+            )
+            path = os.path.join(args.plans, f"{name}_{args.suffix}.txt")
+            with open(path, "w") as f:
+                f.write(plan_txt)
+        # run 2: fresh build, bench protocol
+        spark.catalog.clearCache()
+        t4 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        t5 = time.time()
+        out[name] = {
+            "build_s": round(t1 - t0, 3),
+            "plan_s": round(t2 - t1, 3),
+            "exec1_s": round(t3 - t2, 3),
+            "run2_total_s": round(t5 - t4, 3),
+        }
+        print(f"# {name}: {json.dumps(out[name])}", file=sys.stderr)
+    print(json.dumps(out, indent=1))
+    spark.stop()
+
+
 if __name__ == "__main__":
+    if sys.argv[1:2] == ["--profile"]:
+        profile(sys.argv[2:])
+        sys.exit(0)
     main()

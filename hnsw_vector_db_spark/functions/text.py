@@ -165,13 +165,17 @@ def poly_hash_bulk(
 
     sess = SparkSession.getActiveSession()
     if sess is not None:
-        from hnsw_vector_db_spark.session import ensure_package_shipped
+        from hnsw_vector_db_spark.session import (
+            ensure_package_shipped,
+            install_zip_guard,
+        )
 
         ensure_package_shipped(sess)
     key = (base, mod)
     if key not in _POLY_BULK_CACHE:
 
         def _f(col: pd.Series) -> pd.Series:
+            install_zip_guard()
             out, nulls = _poly_hash_np(col.tolist(), base, mod)
             res = pd.Series(out)
             if nulls.any():
@@ -206,7 +210,10 @@ def poly_fold_ids_bulk(
 
     sess = SparkSession.getActiveSession()
     if sess is not None:
-        from hnsw_vector_db_spark.session import ensure_package_shipped
+        from hnsw_vector_db_spark.session import (
+            ensure_package_shipped,
+            install_zip_guard,
+        )
 
         ensure_package_shipped(sess)
     key = (base, mod, offset)
@@ -254,6 +261,7 @@ def poly_fold_ids_bulk(
             return out, nulls
 
         def _f(col: pd.Series) -> pd.Series:
+            install_zip_guard()
             out, nulls = _fold_rows(col.tolist())
             res = pd.Series(out)
             if nulls.any():
@@ -298,7 +306,10 @@ def minhash_mins_bulk(
 
     sess = SparkSession.getActiveSession()
     if sess is not None:
-        from hnsw_vector_db_spark.session import ensure_package_shipped
+        from hnsw_vector_db_spark.session import (
+            ensure_package_shipped,
+            install_zip_guard,
+        )
 
         ensure_package_shipped(sess)
     key = (k, seed, base, mod)
@@ -308,6 +319,7 @@ def minhash_mins_bulk(
         b_co = np.array([p[1] for p in params], np.int64)
 
         def _f(col: pd.Series) -> pd.Series:
+            install_zip_guard()
             from itertools import chain
 
             rows = col.tolist()

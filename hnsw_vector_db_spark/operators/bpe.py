@@ -155,12 +155,13 @@ def _segment_words_applied(
     tests/test_bpe.py."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(words.sparkSession)
     mlist = [(m[0], m[1]) for m in merges]
 
     def _seg(batches):
+        install_zip_guard()
         for pdf in batches:
             out = []
             for w in pdf["word"]:
@@ -670,7 +671,7 @@ def _encode_piece_table(
     :func:`byte_bpe_encode` and :func:`byte_tokenizer_stats`."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(pieces.sparkSession)
     ranks: dict[tuple[str, str], int] = {}
@@ -678,6 +679,7 @@ def _encode_piece_table(
         ranks.setdefault((m[0], m[1]), i)
 
     def _enc(batches):
+        install_zip_guard()
         b2c = byte_char_table()
         for pdf in batches:
             out = []
@@ -844,7 +846,7 @@ def byte_bpe_decode(
     skipped token is corrupted text with no error signature.
 
     Arrow-batched mapInPandas; embarrassingly parallel per row."""
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     import pandas as pd
 
@@ -856,6 +858,7 @@ def byte_bpe_decode(
     eod_id = 256 + len(merges)
 
     def _dec(batches):
+        install_zip_guard()
         c2b = {c: b for b, c in byte_char_table().items()}
         for pdf in batches:
             texts = []

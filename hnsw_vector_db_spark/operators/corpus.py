@@ -845,7 +845,7 @@ def pack_best_fit(
     non-numeric ids already fail loudly in the ANSI cast upstream)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     if seq_len < 1:
         raise ValueError(f"seq_len must be >= 1, got {seq_len}")
@@ -869,6 +869,7 @@ def pack_best_fit(
     )
 
     def _ffd(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_guard()
         if pdf[id_col].isna().any():
             raise ValueError(
                 f"pack_best_fit: NULL {id_col} row — every row needs a "

@@ -591,6 +591,7 @@ def ema_smooth(
     beta = 1.0 - alpha
 
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_guard()
         pdf = pdf.sort_values([ts_col, id_col])
         # float64 regardless of the column's dtype — an int64 value
         # column would otherwise truncate the recurrence on assignment
@@ -611,7 +612,7 @@ def ema_smooth(
     # whether a grouped-map closure needs the module on workers is one
     # refactor away from changing, and shipping is an idempotent no-op
     # after the first call (the skyline order-dependence lesson)
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(events.sparkSession)
     schema = f"{key_col} long, {id_col} long, {value_col} double, ema double"

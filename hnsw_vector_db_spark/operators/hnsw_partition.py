@@ -29,7 +29,11 @@ query, and each iteration expands every live query's nearest unexpanded
 beam member at once. The queries go through in chunks whose visited
 masks stay under ``_VISITED_CHUNK_BYTES``. A query whose distances come
 within rounding error of a tie is answered by ``search`` instead, so
-both kernels return the same nodes in the same order.
+both kernels return the same nodes in the same order. So is every query
+of a call whose beam covers a whole cell of ``_WIDE_BEAM_MIN_N`` or more
+nodes (``max(ef, k) >= n``, as in exhaustive checks): there each
+lock-step iteration would sort all n beam members, and the heap loop is
+faster.
 
 Connectivity guarantee (the reference's documented stranded-edge defect,
 `core/hnsw/graph.py:158-168` re-prune and `:191-207` delete, does NOT
@@ -59,6 +63,12 @@ from pyspark.sql import functions as F
 # cell of n nodes serves max(1, _VISITED_CHUNK_BYTES // n) queries at a
 # time.
 _VISITED_CHUNK_BYTES = 16 * 1024 * 1024
+# Smallest cell whose whole-cell beams (max(ef, k) >= n) search_batch
+# hands to the per-query heap loop. Lock-step iterations sort the whole
+# beam, so their cost grows with n^2; on a 4-core x86 host at dim 64 the
+# two kernels break even near n = 110 (n = 32: lock step 2x faster;
+# n = 376: heap loop 3x faster).
+_WIDE_BEAM_MIN_N = 128
 
 
 def _pad_layers(n: int, n_layers: int, la, sa, da) -> list[np.ndarray]:
@@ -422,14 +432,27 @@ class LocalHNSW:
         holds ``search(Q[b], k, ef)`` in order, padded with -1 / inf when
         the beam found fewer than ``k`` nodes. Node ids are always equal
         to ``search``'s; distances agree to rounding error (summation
-        order differs from the one-query BLAS call).
+        order differs from the one-query BLAS call). A beam as wide as a
+        cell of at least ``_WIDE_BEAM_MIN_N`` nodes is answered by
+        ``search`` row by row.
         """
         Q = np.asarray(Q, dtype=np.float64)
         n = 0 if self.X is None else len(self.X)
         kk = min(k, n)
         nodes = np.full((len(Q), kk), -1, dtype=np.int64)
         dists = np.full((len(Q), kk), np.inf)
+
+        def by_search(b: int) -> None:
+            res = self.search(Q[b], k, ef)
+            nodes[b], dists[b] = -1, np.inf
+            nodes[b, : len(res)] = [node for node, _ in res]
+            dists[b, : len(res)] = [dist for _, dist in res]
+
         if not n or not len(Q):
+            return nodes, dists
+        if max(ef, k) >= n >= _WIDE_BEAM_MIN_N:
+            for b in range(len(Q)):
+                by_search(b)
             return nodes, dists
         Qs = Q
         if self.metric == "cosine":  # row by row, exactly as search() does
@@ -453,10 +476,7 @@ class LocalHNSW:
             nodes[s:s + step] = bn[:, :kk]
             dists[s:s + step] = bd[:, :kk]
             for b in s + np.flatnonzero(tied):
-                res = self.search(Q[b], k, ef)
-                nodes[b], dists[b] = -1, np.inf
-                nodes[b, : len(res)] = [node for node, _ in res]
-                dists[b, : len(res)] = [dist for _, dist in res]
+                by_search(b)
         return nodes, dists
 
     # -- serialization: build once, search many ---------------------------
@@ -582,11 +602,12 @@ def hnsw_build(
         raise ValueError(f"m must be >= 2, got {m}")
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(assigned.sparkSession)
 
     def per_cell(key, pdf):
+        install_zip_guard()
         if pdf.empty:
             return pd.DataFrame(
                 columns=[
@@ -659,7 +680,7 @@ def hnsw_insert(
     import pandas as pd
 
     from hnsw_vector_db_spark.operators.similarity import assign_to_centroids
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(index.sparkSession)
 
@@ -681,6 +702,7 @@ def hnsw_insert(
     ]
 
     def per_cell(idx_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_guard()
         if new_pdf.empty:
             # untouched cell: pass the stored row through byte-identical
             # (reindex, not [], so legacy pre-e_prot rows emit null e_prot
@@ -764,7 +786,7 @@ def hnsw_delete(
         raise ValueError(f"m must be >= 2, got {m}")
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(index.sparkSession)
     tomb = np.array(
@@ -778,6 +800,7 @@ def hnsw_delete(
     ]
 
     def per_rows(batches):
+        install_zip_guard()
         for pdf in batches:
             out = []
             for _, st in pdf.iterrows():
@@ -1045,7 +1068,7 @@ def hnsw_search(
     it."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     spark = queries.sparkSession
     ensure_package_shipped(spark)
@@ -1093,6 +1116,7 @@ def hnsw_search(
     ef_eff = max(ef, k_fetch)
 
     def per_cell(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
+        install_zip_guard()
         if idx_pdf.empty or q_pdf.empty:
             return pd.DataFrame(columns=[query_id_col, id_col, "dist"])
         st = idx_pdf.iloc[0]

@@ -175,7 +175,7 @@ def knn_batch_twophase(
     import numpy as np
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     spark = vectors.sparkSession
     ensure_package_shipped(spark)
@@ -193,6 +193,7 @@ def knn_batch_twophase(
         bc = spark.sparkContext.broadcast((qids, Qm))
 
         def topk_block(batches):
+            install_zip_guard()
             b_qids, b_Q = bc.value
             for pdf in batches:
                 if pdf.empty:

@@ -318,7 +318,7 @@ def synthesize_media(
     mapInPandas; output (id, payload binary, modality, payload_bytes)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(docs.sparkSession)
 
@@ -344,6 +344,7 @@ def synthesize_media(
         return encode_wav(samples, rate=8000, channels=1), "audio_wav"
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             payloads = [
                 _payload(int(i), t if isinstance(t, str) else "")
@@ -375,11 +376,12 @@ def decode_features(
     array<float>, feature_norm)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             decoded = [
                 _decode_one(p, m)
@@ -420,7 +422,7 @@ def resize_media(
     downstream pruning."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
     n_bytes = target_w * target_h
@@ -444,6 +446,7 @@ def resize_media(
         return (payload * reps)[:n_bytes]
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             out = [_resize_one(p) for p in pdf[payload_col]]
             yield pd.DataFrame(
@@ -499,11 +502,12 @@ def perturb_images(
     encoder both real)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             out_id, out_payload, out_mod = [], [], []
             for i, p, m in zip(pdf[id_col], pdf[payload_col], pdf[modality_col]):
@@ -555,7 +559,7 @@ def phash_features(
     join cheap — the same staging as minhash signatures)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
 
@@ -584,6 +588,7 @@ def phash_features(
         return h
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             out_id, out_h = [], []
             for i, p, m in zip(pdf[id_col], pdf[payload_col], pdf[modality_col]):
@@ -696,11 +701,12 @@ def audio_spectral_features(
     duration_s, sample_rate)."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             rows = []
             for p in pdf[payload_col]:
@@ -888,11 +894,12 @@ def image_meta(
     crawl runs BEFORE spending any pixel decode."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(media.sparkSession)
 
     def run(batches):
+        install_zip_guard()
         for pdf in batches:
             metas = [
                 parse_jpeg_header(bytes(p) if p is not None else None)

@@ -398,6 +398,7 @@ def skyline(
     clean = df.na.drop(subset=dims)
 
     def front(batches):
+        install_zip_guard()
         sky_pdf: pd.DataFrame | None = None
         for pdf in batches:
             both = pdf if sky_pdf is None else pd.concat([sky_pdf, pdf], ignore_index=True)
@@ -412,7 +413,7 @@ def skyline(
     # operator having shipped it makes correctness depend on execution
     # ORDER (caught by running skyline first in a fresh foreign-cwd
     # session: ModuleNotFoundError on the Python worker).
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(clean.sparkSession)
     local = clean.mapInPandas(front, schema=clean.schema)

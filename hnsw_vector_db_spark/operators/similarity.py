@@ -88,6 +88,8 @@ def _pairwise_threshold_arrow(a, b, threshold, self_join):
     """
     from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+
     id_a_type = a.schema["id_a"].dataType
     id_b_type = b.schema["id_b"].dataType
     if not isinstance(id_a_type, (LongType, IntegerType)) or not isinstance(
@@ -132,7 +134,10 @@ def _pairwise_threshold_arrow(a, b, threshold, self_join):
     # null-left-id emission path
     null_id_dtype = "Int64" if isinstance(id_a_type, LongType) else "Int32"
 
+    ensure_package_shipped(spark)
+
     def gen(batches):
+        install_zip_guard()
         import numpy as _np
         import pandas as _pd
 
@@ -426,7 +431,7 @@ def assign_to_centroids_blas(
     """
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     spark = vectors.sparkSession
     ensure_package_shipped(spark)
@@ -447,6 +452,7 @@ def assign_to_centroids_blas(
     bc = spark.sparkContext.broadcast((sids, Cm))
 
     def assign_blocks(batches):
+        install_zip_guard()
         b_sids, b_C = bc.value
         c2 = (b_C * b_C).sum(1)[None, :]
         for pdf in batches:

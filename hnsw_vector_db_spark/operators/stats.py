@@ -53,7 +53,7 @@ def label_centroids(
     import numpy as np
     from pyspark.sql.functions import PandasUDFType, pandas_udf
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(vectors.sparkSession)
 
@@ -61,6 +61,7 @@ def label_centroids(
     # isn't expressible through type hints
     @pandas_udf("array<double>", PandasUDFType.GROUPED_AGG)
     def _centroid(v):
+        install_zip_guard()
         X = np.vstack(v.to_numpy()).astype(np.float64)
         return [float(x) for x in np.round(X.mean(axis=0), round_dp)]
 
@@ -68,6 +69,7 @@ def label_centroids(
     # (INVALID_PANDAS_UDF_PLACEMENT), so the count rides the same UDF lane
     @pandas_udf("long", PandasUDFType.GROUPED_AGG)
     def _count(v):
+        install_zip_guard()
         return len(v)
 
     return (

@@ -514,7 +514,7 @@ def hash_embed(
     classifier/report oracles and tests/test_text.py)."""
     from pyspark.sql.functions import pandas_udf
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(docs.sparkSession)
     sparse = _hash_sparse(docs, dim, text_col, id_col)
@@ -524,6 +524,7 @@ def hash_embed(
 
     @pandas_udf("array<double>")
     def _dense_unit(col: pd.Series) -> pd.Series:
+        install_zip_guard()
         import numpy as np
 
         out = []
@@ -641,7 +642,7 @@ def normalize_text(
     (id_col, norm_text)."""
     from pyspark.sql.functions import pandas_udf
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     if form not in ("NFC", "NFKC", "NFD", "NFKD"):
         raise ValueError(f"unknown normalization form {form!r}")
@@ -649,6 +650,7 @@ def normalize_text(
 
     @pandas_udf("string")
     def _norm(s: pd.Series) -> pd.Series:
+        install_zip_guard()
         import unicodedata
 
         def f(x):
@@ -795,6 +797,7 @@ def heavy_hitters(
     """
 
     def mg_candidates(batches):
+        install_zip_guard()
         # consumes DOCUMENT rows and tokenizes in pandas (ASCII \s+, the
         # tokens() class) — Arrow then carries one row per doc, not one
         # per token (~100x fewer rows through the Python boundary; the
@@ -834,7 +837,7 @@ def heavy_hitters(
     # one core (measured: 64x docs in 1 split = 14 s single-task vs ~2 s
     # spread; the same note as dedup._doc_shingle_sets). One tiny
     # shuffle of the raw text buys full-width parallelism.
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(docs.sparkSession)
     spread = docs.select(text_col).repartition(
@@ -873,12 +876,15 @@ def window_chunk_udtf(width: int, stride: int):
     """
     from pyspark.sql.functions import udtf
 
+    from hnsw_vector_db_spark.session import install_zip_guard
+
     if width < 1 or stride < 1:
         raise ValueError(f"width/stride must be >= 1, got {width}/{stride}")
 
     @udtf(returnType="chunk_idx: int, chunk: string, n_words: int")
     class WindowChunks:
         def eval(self, text: str):
+            install_zip_guard()
             if text is None:
                 return
             # the explicit ASCII whitespace class of Java's \s+ — NOT
@@ -919,7 +925,10 @@ def window_chunks(
     if width < 1 or stride < 1:
         raise ValueError(f"width/stride must be >= 1, got {width}/{stride}")
     if impl == "udtf":
+        from hnsw_vector_db_spark.session import ensure_package_shipped
+
         spark = docs.sparkSession
+        ensure_package_shipped(spark)
         spark.udtf.register(
             "window_chunks_udtf", window_chunk_udtf(width, stride)
         )

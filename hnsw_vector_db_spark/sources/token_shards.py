@@ -122,7 +122,7 @@ def write_token_shards(
     collecting/writing the manifest runs the job. See the module
     docstring for the FILESYSTEM REQUIREMENT (local/shared mount only).
     """
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
     from hnsw_vector_db_spark.sources.wet import _check_local_master
 
     if dtype == "auto":
@@ -143,6 +143,7 @@ def write_token_shards(
     os.makedirs(out_dir, exist_ok=True)
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         # repartition(n, col) routes by hash(col) % n — a task can hold
         # several shard values; write one file pair PER SHARD PRESENT
         # (the write_wet rule), never one per task.
@@ -232,7 +233,7 @@ def audit_token_shards(spark: SparkSession, path: str) -> DataFrame:
     Output: (file, n_docs, n_tokens, dtype, magic_ok, idx_ok, bin_ok,
     offsets_ok, ok). A shard whose index is unreadable reports NULL
     counts with ok=false; ok = every check true."""
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(spark)
     stem = lambda c: F.regexp_replace(  # noqa: E731
@@ -256,6 +257,7 @@ def audit_token_shards(spark: SparkSession, path: str) -> DataFrame:
     _names = {v[0]: k for k, v in _DTYPES.items()}
 
     def _audit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         for pdf in batches:
             rows = []
             for name, iblob, bblob in zip(pdf["file"], pdf["idx"], pdf["bin"]):
@@ -317,7 +319,7 @@ def read_token_shards(
     the file listing as a ``pathGlobFilter`` alternation, so unselected
     shards are never opened, listed into tasks, or transferred — the
     binary artifact's version of partition pruning."""
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(spark)
     if shards is not None:
@@ -351,6 +353,7 @@ def read_token_shards(
     paired = idx.join(bin_, "file", "full_outer")
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         for pdf in batches:
             out_file, out_doc, out_off, out_len, out_ids = [], [], [], [], []
             for name, iblob, bblob in zip(

@@ -56,6 +56,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 from hnsw_vector_db_spark.sources.vectorflow_snapshot import (
     INDEX_FILE,
     METADATA_FILE,
@@ -131,6 +132,7 @@ class VectorFlowReader(DataSourceReader):
         ]
 
     def read(self, partition: _NodeSlice):
+        install_zip_guard()
         if not partition.nodes:
             return
         if not partition.want_vectors:
@@ -190,6 +192,7 @@ class VectorFlowWriter(DataSourceWriter):
     def write(self, iterator) -> _SpillMessage:
         from pyspark import TaskContext
 
+        install_zip_guard()
         pid = TaskContext.get().partitionId()
         ids, levels, vecs, meta = [], [], [], {}
         for row in iterator:
@@ -334,7 +337,5 @@ def register(spark) -> None:
     classes are cloudpickled by reference, so the worker must be able to
     import the module — same deployment story as every mapInPandas
     operator here)."""
-    from hnsw_vector_db_spark.session import ensure_package_shipped
-
     ensure_package_shipped(spark)
     spark.dataSource.register(VectorFlowDataSource)

@@ -112,7 +112,7 @@ def write_wet(
     ``vectorflow`` registered datasource (a real DataSource V2
     writer) or parquet + a distcp-style export.
     """
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     _check_local_master(df.sparkSession.conf.get("spark.master", ""))
     ensure_package_shipped(df.sparkSession)
@@ -120,6 +120,7 @@ def write_wet(
     shard = F.pmod(F.xxhash64(F.col(url_col)), F.lit(n_files))
 
     def _write(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         # repartition(n, col) routes by hash(col) % n, so one task can
         # legally receive MORE than one shard value — write one file
         # per shard present, never one file per task, or two shards
@@ -243,7 +244,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     parse, Content-Length framing (see module docstring). The caller
     filters `rec_type == 'conversion'` for page text; `warcinfo` and
     friends stay visible for lineage audits."""
-    from hnsw_vector_db_spark.session import ensure_package_shipped
+    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 
     ensure_package_shipped(spark)
     raw = (
@@ -254,6 +255,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     )
 
     def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         for pdf in batches:
             recs: list[tuple] = []
             for p, c in zip(pdf["path"], pdf["content"]):

@@ -26,6 +26,8 @@ from typing import Any, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+
 OUT_SCHEMA = (
     "user_id long, session_start timestamp, session_end timestamp, "
     "n_events long, sum_value double"
@@ -38,6 +40,7 @@ def _session_fn(gap_us: int):
     def fn(
         key: tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state
     ) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         user = key[0]
         closed: list[tuple] = []
 
@@ -106,8 +109,6 @@ def stream_sessionize(
     gap (event-time timeout)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped
-
     ensure_package_shipped(events_stream.sparkSession)
     n, unit = gap.split()
     per = {"minute": 60, "minutes": 60, "second": 1, "seconds": 1, "hour": 3600, "hours": 3600}
@@ -136,6 +137,7 @@ def _ema_fn(alpha: float):
     def fn(
         key: tuple[Any, ...], pdf_iter: Iterator[pd.DataFrame], state
     ) -> Iterator[pd.DataFrame]:
+        install_zip_guard()
         if state.hasTimedOut:  # pragma: no cover - no timeouts configured
             state.remove()
             yield pd.DataFrame(
@@ -195,8 +197,6 @@ def stream_ema(
     event-time timeout if the key domain is unbounded.
     """
     from pyspark.sql.streaming.state import GroupStateTimeout
-
-    from hnsw_vector_db_spark.session import ensure_package_shipped
 
     ensure_package_shipped(events_stream.sparkSession)
     return (

@@ -98,6 +98,54 @@ def test_bad_stream_state_provider_fails_at_import():
     assert "rocksdb" in last and "hdfs" in last
 
 
+def test_split_write_files_names_a_missing_partition(tmp_path):
+    """A partitionBy split write that left one micro-batch without a file
+    fails with the partition's name instead of streaming one batch."""
+    (tmp_path / "_b=0").mkdir()
+    (tmp_path / "_b=0" / "part-0.parquet").write_bytes(b"")
+    assert entry_mod._split_write_files(str(tmp_path), "_b", (0,)) == [
+        [str(tmp_path / "_b=0" / "part-0.parquet")]
+    ]
+    with pytest.raises(RuntimeError, match=r"_b=5"):
+        entry_mod._split_write_files(str(tmp_path), "_b", (0, 5))
+
+
+def test_stream_sessionize_sentinel_is_max_event_plus_30_days(
+    spark, monkeypatch
+):
+    """The watermark sentinel lands exactly 30 days after the last event
+    under a non-UTC session whose driver process runs in yet another
+    zone (a collected timestamp is naive driver-local time)."""
+    import tempfile
+    import time
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    made = []
+    mkdtemp = tempfile.mkdtemp
+    monkeypatch.setattr(
+        tempfile, "mkdtemp", lambda *a, **kw: made.append(mkdtemp(*a, **kw)) or made[-1]
+    )
+    old_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        entry_mod.q_stream_sessionize(spark, SF)
+        max_us = entry_mod._events(spark, SF).agg(
+            F.unix_micros(F.max("ts"))
+        ).collect()[0][0]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+        spark.conf.set("spark.sql.session.timeZone", old_tz)
+    (work,) = [d for d in made if "stream_sess_" in d]
+    ts = pq.read_table(f"{work}/src/sentinel.parquet").column("ts")
+    assert ts.type.tz == "UTC"
+    assert ts.cast("int64").to_pylist() == [max_us + 30 * 86_400_000_000]
+
+
 def test_doc_counts_match_live_dicts():
     """README's stated query/oracle/test counts are DERIVED numbers —
     this test parses them back against the live dicts so drift fails CI

@@ -114,6 +114,33 @@ def test_search_batch_equals_search(metric, monkeypatch):
     _assert_batch_equals_search(idx, Q, 10, 24)
 
 
+def test_search_batch_sends_whole_cell_beams_to_search(monkeypatch):
+    """A beam covering a cell of at least _WIDE_BEAM_MIN_N nodes is
+    answered by search() for every query and never enters the lock-step
+    kernel; a smaller cell, or a narrower beam, stays in lock step."""
+    rng = np.random.RandomState(5)
+    n = hnsw_partition._WIDE_BEAM_MIN_N
+    big = LocalHNSW(m=6, ef_construction=32)
+    big.build(rng.randn(n, 8))
+    small = LocalHNSW(m=6, ef_construction=32)
+    small.build(rng.randn(n - 1, 8))
+    Q = rng.randn(12, 8)
+
+    for idx, k, ef, wide in [
+        (big, 3, n, True), (big, n, 8, True), (big, 3, n - 1, False),
+        (small, 3, 4 * n, False),
+    ]:
+        searched, stepped = [], []
+        search, beam = idx.search, idx._beam_batch
+        monkeypatch.setattr(idx, "search", lambda *a: searched.append(a) or search(*a))
+        monkeypatch.setattr(idx, "_beam_batch", lambda *a: stepped.append(a) or beam(*a))
+        nodes, _ = idx.search_batch(Q, k, ef)
+        monkeypatch.undo()
+        assert (len(searched), bool(stepped)) == ((len(Q), False) if wide else (0, True))
+        for b, q in enumerate(Q):
+            assert nodes[b][nodes[b] >= 0].tolist() == [i for i, _ in idx.search(q, k, ef)]
+
+
 def test_hnsw_build_warns_nothing_about_type_hints(fitted):
     """applyInPandas gets an un-hinted function, so PySpark has no eval
     type to (fail to) infer from hints."""
