@@ -12,10 +12,15 @@ JVM-side inside whole-stage codegen, so a distance over a 100 TB vector
 column never crosses the Python boundary. Inputs are cast elementwise to
 DOUBLE first (the reference computes in float64 too, `engine.py:82`), which
 also makes results bit-comparable with a DuckDB oracle casting ``::DOUBLE[]``.
+
+The two operators that broadcast a small side to numpy blocks (the BLAS
+kNN and centroid assignment) share :func:`block_distances`, the same four
+metrics over float64 matrices.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -180,3 +185,33 @@ def distance(a: Column | str, b: Column | str, metric: str = "euclidean") -> Col
             f"unknown metric {metric!r}; one of {sorted(METRICS)}"
         ) from None
     return fn(a, b)
+
+
+def unit_rows(X: np.ndarray) -> np.ndarray:
+    """Rows of ``X`` scaled to unit L2 norm; zero rows stay zero (so their
+    cosine distance is 1.0, the reference's zero-norm guard)."""
+    n = np.linalg.norm(X, axis=1, keepdims=True)
+    return X / np.where(n == 0, 1.0, n)
+
+
+def block_distances(X: np.ndarray, Y: np.ndarray, metric: str) -> np.ndarray:
+    """The ``(len(X), len(Y))`` distance matrix between float64 row blocks,
+    in numpy/BLAS form, for the operators that broadcast one side to the
+    executors (``knn_batch_twophase``, ``assign_to_centroids_blas``). For
+    cosine, ``Y`` must already be :func:`unit_rows` (callers normalize
+    the broadcast side once on the driver). Euclidean is
+    ``||x||^2 - 2x.y + ||y||^2``, which can differ from the Column
+    expressions' sum of squares in the last ulp. Any other metric name
+    is euclidean."""
+    if metric == "cosine":
+        return 1.0 - unit_rows(X) @ Y.T
+    if metric == "dot_product":
+        return -(X @ Y.T)
+    if metric == "manhattan":
+        return np.abs(X[:, None, :] - Y[None, :, :]).sum(axis=2)
+    return np.sqrt(
+        np.maximum(
+            (X * X).sum(1)[:, None] - 2.0 * (X @ Y.T) + (Y * Y).sum(1)[None, :],
+            0.0,
+        )
+    )

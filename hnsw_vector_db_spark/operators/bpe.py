@@ -43,6 +43,7 @@ import heapq
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from hnsw_vector_db_spark.functions.text import tokens
+from hnsw_vector_db_spark.session import bounded_collect
 
 END = "</w>"  # end-of-word marker, per the original formulation
 
@@ -253,28 +254,16 @@ def train_merges(
     return merges
 
 
-def _bounded_collect(
-    df: DataFrame, cap: "int | None", what: str, strict: bool = True
-) -> "list | None":
-    """Collect a collapsed histogram with a NAMED size guard — the
-    bounded-collect convention (hnsw_search's max_collect_queries): a
-    histogram that outgrew the driver should raise with advice, not OOM.
-    With ``strict=False`` an over-cap table returns None instead (the
-    caller keeps a fully distributed fallback path)."""
-    if cap is None:
-        return df.collect()
-    rows = df.limit(cap + 1).collect()
-    if len(rows) > cap:
-        if not strict:
-            return None
-        raise ValueError(
-            f"{what} histogram exceeds max_collect={cap} rows; raise the "
-            f"cap (driver memory permitting — the exact-path fix), or "
-            f"pass min_freq=2 to cut the hapax tail (an APPROXIMATION: "
-            f"dropped entries still contribute to pair supports, so the "
-            f"learned merge sequence can change — see the min_freq docs)"
-        )
-    return rows
+def _histogram_cap_error(what: str, param: str, cap: "int | None") -> str:
+    """The over-cap advice for a BPE histogram collect (a histogram that
+    outgrew the driver should raise with advice, not OOM)."""
+    return (
+        f"{what} histogram exceeds {param}={cap} rows; raise the "
+        f"cap (driver memory permitting — the exact-path fix), or "
+        f"pass min_freq=2 to cut the hapax tail (an APPROXIMATION: "
+        f"dropped entries still contribute to pair supports, so the "
+        f"learned merge sequence can change — see the min_freq docs)"
+    )
 
 
 # r13: distinct-word cap for bpe_token_ids' single-collect fast path
@@ -344,10 +333,10 @@ def bpe_train(
     the threshold)."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be >= 1, got {n_merges}")
-    rows = _bounded_collect(
+    rows = bounded_collect(
         _min_freq_cut(word_freqs(docs, text_col, id_col), "wf", min_freq),
         max_collect_words,
-        "word-freq",
+        _histogram_cap_error("word-freq", "max_collect_words", max_collect_words),
     )
     seqs = [(list(r["word"]) + [END], int(r["wf"])) for r in rows]
     return train_merges(seqs, n_merges)
@@ -498,9 +487,7 @@ def bpe_token_ids(
     # distributed two-job form.
     seg_rows = None
     if _BPE_TOKEN_IDS_COLLECT_CAP is not None:
-        seg_rows = _bounded_collect(
-            seg, _BPE_TOKEN_IDS_COLLECT_CAP, "segmented-word", strict=False
-        )
+        seg_rows = bounded_collect(seg, _BPE_TOKEN_IDS_COLLECT_CAP, None)
     spark = docs.sparkSession
     if seg_rows is not None:
         syms = sorted({s for r in seg_rows for s in r["syms"]})
@@ -612,8 +599,10 @@ def byte_bpe_train(
         .groupBy("piece")
         .agg(F.count(F.lit(1)).alias("pf"))
     )
-    rows = _bounded_collect(
-        _min_freq_cut(pf, "pf", min_freq), max_collect_pieces, "piece-freq"
+    rows = bounded_collect(
+        _min_freq_cut(pf, "pf", min_freq),
+        max_collect_pieces,
+        _histogram_cap_error("piece-freq", "max_collect_pieces", max_collect_pieces),
     )
     b2c = byte_char_table()
     seqs = [(_piece_syms(r["piece"], b2c), int(r["pf"])) for r in rows]

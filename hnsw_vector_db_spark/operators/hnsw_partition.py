@@ -59,6 +59,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from hnsw_vector_db_spark.functions.distance import unit_rows
+
 # Byte bound on the (B, n) visited masks of one search_batch chunk: a
 # cell of n nodes serves max(1, _VISITED_CHUNK_BYTES // n) queries at a
 # time.
@@ -196,8 +198,7 @@ class LocalHNSW:
         """Sequential insert of all rows (per-cell => parallel across cells)."""
         X = np.ascontiguousarray(X, dtype=np.float64)
         if self.metric == "cosine":
-            norms = np.linalg.norm(X, axis=1, keepdims=True)
-            X = X / np.where(norms == 0, 1.0, norms)
+            X = unit_rows(X)
         self.X = X
         n = X.shape[0]
         self.levels = np.minimum(
@@ -280,8 +281,7 @@ class LocalHNSW:
         the old top, then run the standard `_insert` per new row."""
         X_new = np.ascontiguousarray(X_new, dtype=np.float64)
         if self.metric == "cosine":
-            norms = np.linalg.norm(X_new, axis=1, keepdims=True)
-            X_new = X_new / np.where(norms == 0, 1.0, norms)
+            X_new = unit_rows(X_new)
         n0 = int(self.X.shape[0]) if self.X is not None and self.X.size else 0
         if n0 == 0:
             self.build(X_new)
@@ -579,6 +579,25 @@ INDEX_SCHEMA = (
     "ids array<long>, levels array<int>, vec_bytes binary, "
     "e_layer array<int>, e_src array<int>, e_dst array<int>, e_prot array<boolean>"
 )
+INDEX_COLUMNS = tuple(f.split()[0] for f in INDEX_SCHEMA.split(", "))
+
+
+def _index_row(cell: int, ids, local: LocalHNSW) -> dict:
+    """One cell's index row (``INDEX_COLUMNS``): the cell id, its vector
+    ids in node order, and the graph's :meth:`LocalHNSW.to_state`."""
+    st = local.to_state()
+    st["cell"] = int(cell)
+    st["ids"] = np.asarray(ids, dtype=np.int64).tolist()
+    return {c: st[c] for c in INDEX_COLUMNS}
+
+
+def _index_local(row) -> LocalHNSW:
+    """The searchable graph stored in one index row (:func:`_index_row`)."""
+    return LocalHNSW.from_state(
+        int(row["n"]), int(row["dim"]), row["metric"], int(row["entry"]),
+        row["levels"], row["vec_bytes"], row["e_layer"], row["e_src"], row["e_dst"],
+        row.get("e_prot"),  # None for legacy pre-e_prot artifacts
+    )
 
 
 def hnsw_build(
@@ -609,35 +628,11 @@ def hnsw_build(
     def per_cell(key, pdf):
         install_zip_guard()
         if pdf.empty:
-            return pd.DataFrame(
-                columns=[
-                    "cell", "n", "dim", "metric", "entry", "ids", "levels",
-                    "vec_bytes", "e_layer", "e_src", "e_dst", "e_prot",
-                ]
-            )
+            return pd.DataFrame(columns=INDEX_COLUMNS)
         X = np.vstack(pdf[vector_col].to_numpy())
-        ids = pdf[id_col].to_numpy().astype(np.int64)
         index = LocalHNSW(m=m, ef_construction=ef_construction, metric=metric, seed=0)
         index.build(X)
-        st = index.to_state()
-        return pd.DataFrame(
-            [
-                {
-                    "cell": int(key[0]),
-                    "n": st["n"],
-                    "dim": st["dim"],
-                    "metric": st["metric"],
-                    "entry": st["entry"],
-                    "ids": ids.tolist(),
-                    "levels": st["levels"],
-                    "vec_bytes": st["vec_bytes"],
-                    "e_layer": st["e_layer"],
-                    "e_src": st["e_src"],
-                    "e_dst": st["e_dst"],
-                    "e_prot": st["e_prot"],
-                }
-            ]
-        )
+        return pd.DataFrame([_index_row(key[0], pdf[id_col].to_numpy(), index)])
 
     return (
         assigned.select("cell", id_col, vector_col)
@@ -696,19 +691,14 @@ def hnsw_insert(
         .join(new_vectors.select(id_col, vector_col), id_col)
     )
 
-    idx_cols = [
-        "cell", "n", "dim", "metric", "entry", "ids", "levels",
-        "vec_bytes", "e_layer", "e_src", "e_dst", "e_prot",
-    ]
-
     def per_cell(idx_pdf: pd.DataFrame, new_pdf: pd.DataFrame) -> pd.DataFrame:
         install_zip_guard()
         if new_pdf.empty:
             # untouched cell: pass the stored row through byte-identical
             # (reindex, not [], so legacy pre-e_prot rows emit null e_prot
             # instead of KeyError-ing the whole merge)
-            return idx_pdf.reindex(columns=idx_cols) if not idx_pdf.empty else (
-                pd.DataFrame(columns=idx_cols)
+            return idx_pdf.reindex(columns=INDEX_COLUMNS) if not idx_pdf.empty else (
+                pd.DataFrame(columns=INDEX_COLUMNS)
             )
         X_new = np.vstack(new_pdf[vector_col].to_numpy()).astype(np.float64)
         new_ids = new_pdf[id_col].to_numpy().astype(np.int64)
@@ -721,11 +711,7 @@ def hnsw_insert(
             cell = int(new_pdf["cell"].iloc[0])
         else:
             st = idx_pdf.iloc[0]
-            local = LocalHNSW.from_state(
-                int(st["n"]), int(st["dim"]), st["metric"], int(st["entry"]),
-                st["levels"], st["vec_bytes"], st["e_layer"], st["e_src"], st["e_dst"],
-                st.get("e_prot"),  # None for legacy pre-e_prot artifacts
-            )
+            local = _index_local(st)
             local.m, local.m0, local.efc = m, 2 * m, ef_construction
             # keep the level-draw geometric distribution consistent with a
             # fresh build at this m (from_state leaves the default ml)
@@ -733,25 +719,7 @@ def hnsw_insert(
             local.insert_batch(X_new)
             ids = np.concatenate([np.asarray(st["ids"], dtype=np.int64), new_ids])
             cell = int(st["cell"])
-        out = local.to_state()
-        return pd.DataFrame(
-            [
-                {
-                    "cell": cell,
-                    "n": out["n"],
-                    "dim": out["dim"],
-                    "metric": out["metric"],
-                    "entry": out["entry"],
-                    "ids": ids.tolist(),
-                    "levels": out["levels"],
-                    "vec_bytes": out["vec_bytes"],
-                    "e_layer": out["e_layer"],
-                    "e_src": out["e_src"],
-                    "e_dst": out["e_dst"],
-                    "e_prot": out["e_prot"],
-                }
-            ]
-        )
+        return pd.DataFrame([_index_row(cell, ids, local)])
 
     return (
         index.groupBy("cell")
@@ -794,11 +762,6 @@ def hnsw_delete(
         dtype=np.int64,
     )
 
-    idx_cols = [
-        "cell", "n", "dim", "metric", "entry", "ids", "levels",
-        "vec_bytes", "e_layer", "e_src", "e_dst", "e_prot",
-    ]
-
     def per_rows(batches):
         install_zip_guard()
         for pdf in batches:
@@ -807,7 +770,7 @@ def hnsw_delete(
                 ids = np.asarray(st["ids"], dtype=np.int64)
                 mask = ~np.isin(ids, tomb)
                 if mask.all():
-                    out.append({c: st.get(c) for c in idx_cols})
+                    out.append({c: st.get(c) for c in INDEX_COLUMNS})
                     continue
                 if not mask.any():
                     continue  # whole cell deleted -> drop the row
@@ -817,18 +780,8 @@ def hnsw_delete(
                     m=m, ef_construction=ef_construction, metric=st["metric"], seed=0
                 )
                 local.build(X)
-                s2 = local.to_state()
-                out.append(
-                    {
-                        "cell": int(st["cell"]), "n": s2["n"], "dim": s2["dim"],
-                        "metric": s2["metric"], "entry": s2["entry"],
-                        "ids": ids[mask].tolist(), "levels": s2["levels"],
-                        "vec_bytes": s2["vec_bytes"], "e_layer": s2["e_layer"],
-                        "e_src": s2["e_src"], "e_dst": s2["e_dst"],
-                        "e_prot": s2["e_prot"],
-                    }
-                )
-            yield pd.DataFrame(out, columns=idx_cols)
+                out.append(_index_row(st["cell"], ids[mask], local))
+            yield pd.DataFrame(out, columns=INDEX_COLUMNS)
 
     return index.mapInPandas(per_rows, INDEX_SCHEMA)
 
@@ -987,11 +940,7 @@ def _route_cells(
     collected query batch with it on the driver."""
     nb = min(nprobe, C.shape[0])
     if metric == "cosine":
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        Cn = C / np.where(cn == 0, 1.0, cn)
-        qn = np.linalg.norm(Q, axis=1, keepdims=True)
-        Qn = Q / np.where(qn == 0, 1.0, qn)
-        D = -(Qn @ Cn.T)  # (B, n_cells); smaller = nearer
+        D = -(unit_rows(Q) @ unit_rows(C).T)  # (B, n_cells); smaller = nearer
     else:
         # argsort of ||c||^2 - 2 c.q == argsort of euclidean dist
         D = (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T)
@@ -1068,19 +1017,21 @@ def hnsw_search(
     it."""
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+    from hnsw_vector_db_spark.session import (
+        bounded_collect,
+        ensure_package_shipped,
+        install_zip_guard,
+    )
 
     spark = queries.sparkSession
     ensure_package_shipped(spark)
-    qin = queries.select(query_id_col, query_vec_col).limit(
-        max_collect_queries + 1
-    ).collect()
-    if len(qin) > max_collect_queries:
-        raise ValueError(
-            f"hnsw_search collects the query batch for probed-cell routing; "
-            f"got > {max_collect_queries} queries. Chunk the batch and union "
-            f"results, or pass max_collect_queries= explicitly."
-        )
+    qin = bounded_collect(
+        queries.select(query_id_col, query_vec_col),
+        max_collect_queries,
+        f"hnsw_search collects the query batch for probed-cell routing; "
+        f"got > {max_collect_queries} queries. Chunk the batch and union "
+        f"results, or pass max_collect_queries= explicitly.",
+    )
     schema = f"{query_id_col} long, {query_vec_col} array<float>, cell int"
     if qin:
         import pyarrow as pa
@@ -1120,11 +1071,7 @@ def hnsw_search(
         if idx_pdf.empty or q_pdf.empty:
             return pd.DataFrame(columns=[query_id_col, id_col, "dist"])
         st = idx_pdf.iloc[0]
-        local = LocalHNSW.from_state(
-            int(st["n"]), int(st["dim"]), st["metric"], int(st["entry"]),
-            st["levels"], st["vec_bytes"], st["e_layer"], st["e_src"], st["e_dst"],
-            st.get("e_prot"),  # None for legacy pre-e_prot artifacts
-        )
+        local = _index_local(st)
         ids = np.asarray(st["ids"], dtype=np.int64)
         Q = np.vstack(q_pdf[query_vec_col].to_numpy()).astype(np.float64)
         nodes, dists = local.search_batch(Q, k_fetch, ef_eff)

@@ -36,7 +36,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hnsw_vector_db_spark.functions.distance import distance, lit_double_array
+from hnsw_vector_db_spark.functions.distance import (
+    block_distances,
+    distance,
+    lit_double_array,
+    unit_rows,
+)
 
 
 def with_distance(
@@ -185,11 +190,7 @@ def knn_batch_twophase(
     def chunk_candidates(qrows):
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
         Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        if metric == "cosine":
-            qn = np.linalg.norm(Q, axis=1, keepdims=True)
-            Qm = Q / np.where(qn == 0, 1.0, qn)
-        else:
-            Qm = Q
+        Qm = unit_rows(Q) if metric == "cosine" else Q
         bc = spark.sparkContext.broadcast((qids, Qm))
 
         def topk_block(batches):
@@ -200,23 +201,7 @@ def knn_batch_twophase(
                     continue
                 X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
                 ids = pdf[id_col].to_numpy()
-                if metric == "cosine":
-                    xn = np.linalg.norm(X, axis=1, keepdims=True)
-                    Xn = X / np.where(xn == 0, 1.0, xn)
-                    D = 1.0 - Xn @ b_Q.T  # (B, Q)
-                elif metric == "dot_product":
-                    D = -(X @ b_Q.T)
-                elif metric == "manhattan":
-                    D = np.abs(X[:, None, :] - b_Q[None, :, :]).sum(axis=2)
-                else:  # euclidean via ||x||^2 - 2xq + ||q||^2
-                    D = np.sqrt(
-                        np.maximum(
-                            (X * X).sum(1)[:, None]
-                            - 2.0 * (X @ b_Q.T)
-                            + (b_Q * b_Q).sum(1)[None, :],
-                            0.0,
-                        )
-                    )
+                D = block_distances(X, b_Q, metric)  # (B, Q)
                 kk = min(k, D.shape[0])
                 part = np.argpartition(D, kk - 1, axis=0)  # (B, Q) first kk
                 out_qid, out_id, out_dist = [], [], []

@@ -34,11 +34,13 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from hnsw_vector_db_spark.functions.distance import (
+    block_distances,
     distance,
     dot_raw,
     lit_double_array,
     lit_long_array,
     select_normalized,
+    unit_rows,
 )
 
 
@@ -431,48 +433,35 @@ def assign_to_centroids_blas(
     """
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+    from hnsw_vector_db_spark.session import (
+        bounded_collect,
+        ensure_package_shipped,
+        install_zip_guard,
+    )
 
     spark = vectors.sparkSession
     ensure_package_shipped(spark)
-    srows = seeds.select(seed_id_col, seed_vec_col).limit(max_seeds + 1).collect()
-    if len(srows) > max_seeds:
-        raise ValueError(
-            f"assign_to_centroids_blas collects the seed table; got more than "
-            f"max_seeds={max_seeds} rows — shard the assignment or raise the cap"
-        )
+    srows = bounded_collect(
+        seeds.select(seed_id_col, seed_vec_col),
+        max_seeds,
+        f"assign_to_centroids_blas collects the seed table; got more than "
+        f"max_seeds={max_seeds} rows — shard the assignment or raise the cap",
+    )
     srows.sort(key=lambda r: r[0])
     sids = np.array([r[0] for r in srows], dtype=np.int64)
     C = np.array([list(r[1]) for r in srows], dtype=np.float64)
-    if metric == "cosine":
-        cn = np.linalg.norm(C, axis=1, keepdims=True)
-        Cm = C / np.where(cn == 0, 1.0, cn)
-    else:
-        Cm = C
+    Cm = unit_rows(C) if metric == "cosine" else C
     bc = spark.sparkContext.broadcast((sids, Cm))
 
     def assign_blocks(batches):
         install_zip_guard()
         b_sids, b_C = bc.value
-        c2 = (b_C * b_C).sum(1)[None, :]
         for pdf in batches:
             if pdf.empty:
                 continue
             X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
             ids = pdf[id_col].to_numpy()
-            if metric == "cosine":
-                xn = np.linalg.norm(X, axis=1, keepdims=True)
-                D = 1.0 - (X / np.where(xn == 0, 1.0, xn)) @ b_C.T
-            elif metric == "dot_product":
-                D = -(X @ b_C.T)
-            elif metric == "manhattan":
-                D = np.abs(X[:, None, :] - b_C[None, :, :]).sum(axis=2)
-            else:  # euclidean
-                D = np.sqrt(
-                    np.maximum(
-                        (X * X).sum(1)[:, None] - 2.0 * (X @ b_C.T) + c2, 0.0
-                    )
-                )
+            D = block_distances(X, b_C, metric)
             j = D.argmin(axis=1)  # first min == lowest seed id on ties
             yield pd.DataFrame(
                 {

@@ -27,6 +27,11 @@ The guard must be reached from inside each UDF, not from the package
 session without ever importing this package. Every engine UDF therefore
 calls ``install_zip_guard()`` first; its first task in a worker pays the
 old cost once and every later task in that worker skips it.
+
+Row-capped collects (``bounded_collect``). Every operator that pulls a
+table to the driver (a BPE histogram, a query batch, a seed table, a
+snapshot export) goes through one helper that caps the rows and raises an
+error naming the caller's cap parameter.
 """
 
 from __future__ import annotations
@@ -35,7 +40,7 @@ import os
 import sys
 import zipimport
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 # Defaults sized for the test harness (local[32], 128 GiB). On a real
 # cluster these come from spark-submit; everything here is safe to override.
@@ -132,6 +137,23 @@ def install_zip_guard() -> None:
     if TaskContext.get() is None:
         return
     zipimport.zipimporter.invalidate_caches = _invalidate_if_changed
+
+
+def bounded_collect(df: DataFrame, cap: int | None, error: str | None) -> list | None:
+    """Collect ``df`` to the driver under a row cap with one
+    ``limit(cap + 1)`` collect: a table past the cap is detected without
+    collecting all of it. Over the cap this raises ``ValueError(error)``,
+    which should name the caller's cap parameter, or returns None when
+    ``error`` is None (the caller keeps a distributed path). ``cap=None``
+    collects without a cap."""
+    if cap is None:
+        return df.collect()
+    rows = df.limit(cap + 1).collect()
+    if len(rows) <= cap:
+        return rows
+    if error is None:
+        return None
+    raise ValueError(error)
 
 
 def get_spark(app_name: str = "hnsw_vector_db_spark", **overrides: str) -> SparkSession:

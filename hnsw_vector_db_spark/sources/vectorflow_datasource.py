@@ -1,10 +1,10 @@
 """`spark.read.format("vectorflow")` — the snapshot codec as a first-class
 Spark data source (PySpark 4 Python DataSource API).
 
-:mod:`.vectorflow_snapshot` gives the reference's three-file on-disk layout
-(`core/storage/engine.py:19-21`) function-call form; this module plugs the
-same codec into Spark's source/sink registry so the snapshot participates in
-the normal reader/writer surface::
+:mod:`.vectorflow_snapshot` owns the reference's three-file on-disk layout
+(`core/storage/engine.py:19-21`); this module plugs it into Spark's
+source/sink registry so the snapshot participates in the normal
+reader/writer surface::
 
     from hnsw_vector_db_spark.sources.vectorflow_datasource import register
     register(spark)
@@ -14,27 +14,27 @@ the normal reader/writer surface::
 
 Scale shape:
 
-- **Read** parses only ``index.msgpack`` (topology + per-node offsets) on
-  the driver, then hands each input partition a slice of nodes sorted by
-  ``vector_offset``; every executor task seek-reads ONLY its contiguous
-  slab of the dense float64 matrix in ``vectors.bin`` (`engine.py:52-56`'s
-  8-byte ``struct 'II'`` header + row-major rows). The vector payload —
-  the dominant bytes — never lands on the driver.
+- **Read** is the engine's only snapshot reader (``read_snapshot_vectors``
+  / ``read_snapshot_edges`` call it). It parses only ``index.msgpack``
+  (topology + per-node offsets) on the driver, then hands each input
+  partition a slice of nodes sorted by ``vector_offset``; every executor
+  task seek-reads ONLY its contiguous slab of the dense float64 matrix in
+  ``vectors.bin`` (`engine.py:52-56`'s 8-byte ``struct 'II'`` header +
+  row-major rows). The vector payload — the dominant bytes — never lands
+  on the driver.
 - **Write** stages per-task ``.npz`` spills next to the target, then a
-  driver-side commit assembles the reference's exact layout. Assembly is
-  driver-side by design: the format is one dense offset-addressed matrix
-  (inherently single-file), and the reference hard-caps an index at
-  1,000,000 vectors in one process's RAM (`core/hnsw/graph.py:54`) — a
-  migration artifact, not a scan path. The same cap is enforced here
-  (``max_elements`` option) so a 100 TB table cannot be exported by
-  accident.
+  driver-side commit assembles them and hands them to
+  :func:`.vectorflow_snapshot.write_layout`, the one writer of the
+  layout. Each task refuses a partition past ``max_elements`` and the
+  commit refuses a total past it before loading any spill, so a 100 TB
+  table cannot be exported by accident.
 
 The written snapshot has EMPTY adjacency (a vectors-only export): Spark's
 writer interface ships one DataFrame, and topology is a second table. The
 reference loads such a snapshot fine but can then only ever reach the entry
-point, so commit emits the same loud warning as
-:func:`.vectorflow_snapshot.write_snapshot` — use that function with an
-``edges=`` frame for a searchable export.
+point, so ``write_layout`` warns loudly — use
+:func:`.vectorflow_snapshot.write_snapshot` with an ``edges=`` frame for a
+searchable export.
 """
 
 from __future__ import annotations
@@ -44,7 +44,6 @@ import os
 import shutil
 import struct
 import uuid
-import warnings
 from dataclasses import dataclass
 
 import numpy as np
@@ -58,18 +57,17 @@ from pyspark.sql.datasource import (
 
 from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 from hnsw_vector_db_spark.sources.vectorflow_snapshot import (
+    DEFAULT_MAX_ELEMENTS,
     INDEX_FILE,
     METADATA_FILE,
     VECTORS_FILE,
+    check_capacity,
     msgpack_decode,
-    msgpack_encode,
+    write_layout,
 )
 
 VECTORS_SCHEMA = "id long, vector array<double>, level int, metadata string"
 EDGES_SCHEMA = "src long, dst long, layer int"
-
-# the reference's hard capacity (`core/hnsw/graph.py:54`)
-DEFAULT_MAX_ELEMENTS = 1_000_000
 
 
 def _require_path(options) -> str:
@@ -166,12 +164,12 @@ class _SpillMessage(WriterCommitMessage):
 class VectorFlowWriter(DataSourceWriter):
     def __init__(self, options, schema, overwrite: bool):
         self.path = _require_path(options)
-        self.overwrite = overwrite
-        self.max_elements = int(options.get("max_elements", DEFAULT_MAX_ELEMENTS))
         self.params = {
-            k: int(options.get(k.lower(), d))
-            for k, d in (("M", 16), ("ef_construction", 200), ("ef_search", 50))
+            k: int(options[k])
+            for k in ("M", "ef_construction", "ef_search", "max_elements")
+            if k in options
         }
+        self.max_elements = self.params.get("max_elements", DEFAULT_MAX_ELEMENTS)
         names = [f.name for f in schema.fields]
         if "id" not in names or "vector" not in names:
             raise ValueError(
@@ -227,77 +225,26 @@ class VectorFlowWriter(DataSourceWriter):
         return _SpillMessage(file=fname, count=len(ids))
 
     def commit(self, messages) -> None:
-        total = sum(m.count for m in messages)
-        if total > self.max_elements:
+        try:
+            # the total is known before any spill is loaded
+            check_capacity(sum(m.count for m in messages), self.max_elements)
+            parts, store = [], {}
+            for m in sorted(messages, key=lambda m: m.file):
+                with np.load(m.file, allow_pickle=False) as z:
+                    if z["ids"].size:
+                        parts.append((z["ids"], z["levels"], z["X"]))
+                        store.update(
+                            (k, json.loads(v))
+                            for k, v in json.loads(str(z["meta"])).items()
+                        )
+            ids, levels, X = (
+                map(np.concatenate, zip(*parts))
+                if parts
+                else (np.zeros(0), np.zeros(0), np.zeros((0, 0)))
+            )
+            write_layout(self.path, ids, levels, X, store, params=self.params)
+        finally:
             shutil.rmtree(self.staging, ignore_errors=True)
-            raise ValueError(
-                f"snapshot export of {total} vectors exceeds max_elements="
-                f"{self.max_elements} (the reference's one-process capacity, "
-                "core/hnsw/graph.py:54); a table this size belongs in parquet"
-            )
-        ids, levels, mats, store = [], [], [], {}
-        for m in sorted(messages, key=lambda m: m.file):
-            z = np.load(m.file, allow_pickle=False)
-            if z["ids"].size:
-                ids.append(z["ids"])
-                levels.append(z["levels"])
-                mats.append(z["X"])
-            store.update(
-                {k: json.loads(v) for k, v in json.loads(str(z["meta"])).items()}
-            )
-        ids = np.concatenate(ids) if ids else np.zeros(0, dtype=np.int64)
-        levels = np.concatenate(levels) if levels else np.zeros(0, dtype=np.int64)
-        X = np.vstack(mats) if mats else np.zeros((0, 0))
-        order = np.argsort(ids, kind="stable")
-        ids, levels, X = ids[order], levels[order], X[order]
-        if ids.size != np.unique(ids).size:
-            shutil.rmtree(self.staging, ignore_errors=True)
-            raise ValueError("duplicate id in snapshot export")
-        dim = int(X.shape[1]) if ids.size else 0
-        # reference invariant: entry_point is a max-level node
-        # (`core/hnsw/graph.py:170-173`), min-id tiebreak
-        entry = int(ids[np.lexsort((ids, -levels))[0]]) if ids.size else None
-        warnings.warn(
-            "vectorflow sink wrote a vectors-only snapshot (empty adjacency): "
-            "a VectorFlow node loading it can only ever reach the entry "
-            "point. Use write_snapshot(..., edges=...) for a searchable "
-            "export.",
-            stacklevel=2,
-        )
-        params = {
-            "dim": dim,
-            **self.params,
-            "ml": 1.4426950408889634,
-            "max_elements": self.max_elements,
-            "entry_point": entry,
-            "current_id": int(ids.max()) + 1 if ids.size else 0,
-            "nodes": {
-                str(int(nid)): {
-                    "id": int(nid),
-                    "level": int(lv),
-                    "connections": {"0": []},
-                    "vector_offset": i,
-                }
-                for i, (nid, lv) in enumerate(zip(ids, levels))
-            },
-        }
-        with open(os.path.join(self.path, INDEX_FILE), "wb") as f:
-            f.write(msgpack_encode(params))
-        with open(os.path.join(self.path, VECTORS_FILE), "wb") as f:
-            f.write(struct.pack("II", ids.size, dim))
-            f.write(np.ascontiguousarray(X, dtype=np.float64).tobytes())
-        with open(os.path.join(self.path, METADATA_FILE), "w") as f:
-            json.dump(
-                {
-                    "metadata_store": store,
-                    "total_nodes": int(ids.size),
-                    "dimension": dim,
-                    "total_searches": 0,
-                    "total_insertions": int(ids.size),
-                },
-                f,
-            )
-        shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
         shutil.rmtree(self.staging, ignore_errors=True)

@@ -10,13 +10,20 @@ The reference persists an index as three files (`core/storage/engine.py:19-21`):
   metadata dict under the ``"metadata_store"`` key plus summary counters
   (`api/rest/server.py:115-118`, `engine.py:58-66`).
 
-``read_snapshot_vectors`` / ``read_snapshot_edges`` land those as DataFrames
-so an existing VectorFlow deployment can move its data into this engine with
-one call; ``write_snapshot`` goes the other way. Parsing is driver-side by
-design: the reference hard-caps an index at 1,000,000 vectors in one
-process's RAM (`core/hnsw/graph.py:54`), so a snapshot is at most a few GB —
-a one-shot migration artifact, not a scan path. Once imported, data lives in
-parquet and scales with the cluster.
+This module owns that format. ``read_snapshot_vectors`` /
+``read_snapshot_edges`` land a snapshot as DataFrames so an existing
+VectorFlow deployment can move its data into this engine with one call.
+They are ``spark.read.format("vectorflow")`` (:mod:`.vectorflow_datasource`),
+whose tasks each seek-read one slab of the matrix, so the vectors never
+pass through the driver. ``write_layout`` is the one writer of the three
+files: ``write_snapshot`` (vectors plus an edges table) and the
+``format("vectorflow")`` sink (vectors only) both end in it. Writing is
+driver-side by design: the format is one dense offset-addressed matrix,
+and the reference hard-caps an index at 1,000,000 vectors in one
+process's RAM (`core/hnsw/graph.py:54`), so a snapshot is at most a few
+GB — a one-shot migration artifact, not a scan path. Both writers enforce
+that cap (``max_elements``). Once imported, data lives in parquet and
+scales with the cluster.
 
 The msgpack codec below implements the subset of the public MessagePack
 spec (github.com/msgpack/msgpack, spec.md) that the reference's payloads
@@ -29,6 +36,7 @@ from __future__ import annotations
 import json
 import os
 import struct
+import warnings
 from typing import Any
 
 import numpy as np
@@ -37,6 +45,9 @@ from pyspark.sql import DataFrame, SparkSession
 INDEX_FILE = "index.msgpack"
 VECTORS_FILE = "vectors.bin"
 METADATA_FILE = "metadata.json"
+
+# the reference's hard capacity (`core/hnsw/graph.py:54`)
+DEFAULT_MAX_ELEMENTS = 1_000_000
 
 
 # --------------------------------------------------------------------------
@@ -220,32 +231,23 @@ def _dec_map(b: bytes, p: int, n: int) -> tuple[dict, int]:
 # Snapshot read / write
 # --------------------------------------------------------------------------
 
-def _load_raw(path: str) -> tuple[dict, np.ndarray, dict]:
-    with open(os.path.join(path, INDEX_FILE), "rb") as f:
-        graph_data = msgpack_decode(f.read())
-    vfile = os.path.join(path, VECTORS_FILE)
-    if os.path.exists(vfile):
-        with open(vfile, "rb") as f:
-            rows, cols = struct.unpack("II", f.read(8))
-            X = np.frombuffer(f.read(), dtype=np.float64).reshape(rows, cols)
-    else:
-        X = np.zeros((0, graph_data.get("dim", 0)))
-    mfile = os.path.join(path, METADATA_FILE)
-    meta = {}
-    if os.path.exists(mfile):
-        with open(mfile) as f:
-            meta = json.load(f)
-    return graph_data, X, meta
-
-
 def snapshot_params(path: str) -> dict:
     """Index construction params from the snapshot header — dim, M,
     ef_construction, ef_search, ml, max_elements, entry_point, current_id.
     Note the reference itself DROPS distance_metric on reload
     (`engine.py:84-91` vs `graph.py:53`) — a cosine index silently reloads
     as euclidean; our engine keys the metric per query instead."""
-    graph_data, _, _ = _load_raw(path)
+    with open(os.path.join(path, INDEX_FILE), "rb") as f:
+        graph_data = msgpack_decode(f.read())
     return {k: v for k, v in graph_data.items() if k != "nodes"}
+
+
+def _read(spark: SparkSession, path: str, table: str) -> DataFrame:
+    # imported here: the data source module imports this one
+    from hnsw_vector_db_spark.sources.vectorflow_datasource import register
+
+    register(spark)
+    return spark.read.format("vectorflow").option("table", table).load(path)
 
 
 def read_snapshot_vectors(spark: SparkSession, path: str) -> DataFrame:
@@ -254,37 +256,106 @@ def read_snapshot_vectors(spark: SparkSession, path: str) -> DataFrame:
     `api/rest/server.py:75,115-118`) attached as a JSON string column —
     the dict-lookup join the reference does at search time
     (`server.py:174`) becomes a plain column."""
-    graph_data, X, meta = _load_raw(path)
-    store = meta.get("metadata_store", {}) or {}
-    rows = []
-    for nid_str, nd in graph_data["nodes"].items():
-        nid = int(nid_str)
-        md = store.get(nid_str) or store.get(str(nid))
-        rows.append(
-            (
-                nid,
-                [float(x) for x in X[nd["vector_offset"]]],
-                int(nd["level"]),
-                json.dumps(md, separators=(",", ":")) if md is not None else None,
-            )
-        )
-    return spark.createDataFrame(
-        rows, "id long, vector array<double>, level int, metadata string"
-    )
+    return _read(spark, path, "vectors")
 
 
 def read_snapshot_edges(spark: SparkSession, path: str) -> DataFrame:
     """(src, dst, layer): the HNSW adjacency lists flattened to an edges
     table — `HNSWNode.connections` (`core/hnsw/graph.py:15`) in the layout
     SURVEY.md §1.1 prescribes."""
-    graph_data, _, _ = _load_raw(path)
-    rows = []
-    for nid_str, nd in graph_data["nodes"].items():
-        src = int(nid_str)
-        for layer_str, conns in nd["connections"].items():
-            for dst in conns:
-                rows.append((src, int(dst), int(layer_str)))
-    return spark.createDataFrame(rows, "src long, dst long, layer int")
+    return _read(spark, path, "edges")
+
+
+def check_capacity(n: int, max_elements: int) -> None:
+    """Refuse an export past ``max_elements``, the reference's one-process
+    capacity (`core/hnsw/graph.py:54`)."""
+    if n > max_elements:
+        raise ValueError(
+            f"snapshot export of {n} vectors exceeds max_elements="
+            f"{max_elements} (the reference's one-process capacity, "
+            "core/hnsw/graph.py:54); a table this size belongs in parquet"
+        )
+
+
+def write_layout(
+    path: str,
+    ids,
+    levels,
+    X: np.ndarray,
+    store: dict,
+    connections: dict | None = None,
+    params: dict | None = None,
+) -> None:
+    """Write the reference's three files (`engine.py:23-68`) for ``ids``
+    (int), their HNSW ``levels`` and the float64 matrix ``X`` (row i is
+    the vector of ``ids[i]``). ``store`` maps ``str(id)`` to the node's
+    decoded JSON metadata. ``connections`` maps id -> {layer: [dst ids]};
+    a node without an entry, or every node when it is None, gets an
+    empty layer 0. ``params`` overrides the header defaults below.
+
+    Nodes are written in id order, ``vector_offset`` = rank. The entry
+    point defaults to the reference's invariant choice, a node of MAXIMUM
+    level (`core/hnsw/graph.py:170-173` moves entry_point up whenever a
+    higher-level node is inserted), with min-id tiebreak. Raises before
+    writing anything on a duplicated id or more than ``max_elements``
+    rows. An empty table writes a ``(0, 0)`` matrix header."""
+    ids = np.asarray(ids, dtype=np.int64)
+    levels = np.asarray(levels, dtype=np.int64)
+    order = np.argsort(ids, kind="stable")
+    ids, levels, X = ids[order], levels[order], X[order]
+    if ids.size != np.unique(ids).size:
+        raise ValueError("duplicate id in snapshot export")
+    n = int(ids.size)
+    dim = int(X.shape[1]) if n else 0
+    p = {
+        "dim": dim,
+        "M": 16,
+        "ef_construction": 200,
+        "ef_search": 50,
+        "ml": 1.4426950408889634,
+        "max_elements": DEFAULT_MAX_ELEMENTS,
+        "entry_point": int(ids[np.lexsort((ids, -levels))[0]]) if n else None,
+        "current_id": int(ids.max()) + 1 if n else 0,
+        **(params or {}),
+    }
+    check_capacity(n, p["max_elements"])
+    if connections is None:
+        warnings.warn(
+            "snapshot written without edges (empty adjacency): a VectorFlow "
+            "node loading it can only ever reach the entry point. Pass "
+            "write_snapshot(..., edges=hnsw_edges(...)) for a searchable "
+            "snapshot.",
+            stacklevel=3,
+        )
+        connections = {}
+    empty = {0: []}
+    p["nodes"] = {
+        str(nid): {
+            "id": nid,
+            "level": int(lv),
+            "connections": {
+                str(layer): list(dsts)
+                for layer, dsts in connections.get(nid, empty).items()
+            },
+            "vector_offset": i,
+        }
+        for i, (nid, lv) in enumerate(zip(ids.tolist(), levels))
+    }
+    os.makedirs(path, exist_ok=True)
+    with open(os.path.join(path, INDEX_FILE), "wb") as f:
+        f.write(msgpack_encode(p))
+    with open(os.path.join(path, VECTORS_FILE), "wb") as f:
+        f.write(struct.pack("II", n, dim))
+        f.write(np.ascontiguousarray(X, dtype=np.float64).tobytes())
+    meta = {
+        "metadata_store": {k: store[k] for k in p["nodes"] if k in store},
+        "total_nodes": n,
+        "dimension": dim,
+        "total_searches": 0,
+        "total_insertions": n,
+    }
+    with open(os.path.join(path, METADATA_FILE), "w") as f:
+        json.dump(meta, f, indent=2)
 
 
 def write_snapshot(
@@ -295,87 +366,43 @@ def write_snapshot(
 ) -> None:
     """Export a vectors table (id, vector[, level][, metadata]) back into
     the reference's exact three-file layout so a VectorFlow node can load
-    it (`engine.py:70-115`). Collects to the driver — bounded by the
-    reference's own 1M-vector capacity, this is a migration sink.
+    it (`engine.py:70-115`; see :func:`write_layout`). Collects to the
+    driver, capped at ``params["max_elements"]`` (default the reference's
+    own 1M-vector capacity) before the collect: this is a migration sink.
 
     With ``edges=None`` every node is written with empty connections; the
     reference loads such a snapshot but its search can only ever reach the
     entry point, so we warn loudly — pass the ``hnsw_edges`` output (or
-    ``read_snapshot_edges`` of another snapshot) for a searchable export.
-    The entry point defaults to the reference's invariant choice — a node
-    of MAXIMUM level (`core/hnsw/graph.py:170-173` moves entry_point up
-    whenever a higher-level node is inserted) — with min-id tiebreak."""
-    import warnings
+    ``read_snapshot_edges`` of another snapshot) for a searchable export."""
+    from hnsw_vector_db_spark.session import bounded_collect
 
-    os.makedirs(path, exist_ok=True)
+    cap = int((params or {}).get("max_elements", DEFAULT_MAX_ELEMENTS))
     cols = vectors.columns
-    data = vectors.orderBy("id").collect()
-    adj: dict[int, dict[int, list[int]]] = {}
+    data = bounded_collect(
+        vectors,
+        cap,
+        f"write_snapshot collects the vectors table; got more than "
+        f"max_elements={cap} rows (the reference's one-process capacity, "
+        "core/hnsw/graph.py:54); a table this size belongs in parquet",
+    )
+    adj = None
     if edges is not None:
+        adj = {}
         for r in edges.collect():
             adj.setdefault(int(r["src"]), {}).setdefault(int(r["layer"]), []).append(
                 int(r["dst"])
             )
-    else:
-        warnings.warn(
-            "write_snapshot called with edges=None: the exported graph has no "
-            "connections, so a VectorFlow node loading it will only ever find "
-            "the entry point. Pass hnsw_edges(...) output for a searchable "
-            "snapshot.",
-            stacklevel=2,
-        )
-    dim = len(data[0]["vector"]) if data else 0
-
-    def _level(r) -> int:
-        return int(r["level"]) if "level" in cols and r["level"] is not None else 0
-
-    # reference invariant: entry_point is a max-level node (graph.py:170-173)
-    entry = (
-        min((r for r in data), key=lambda r: (-_level(r), int(r["id"])))
-        if data
-        else None
+    has_level, has_meta = "level" in cols, "metadata" in cols
+    write_layout(
+        path,
+        [int(r["id"]) for r in data],
+        [int(r["level"]) if has_level and r["level"] is not None else 0 for r in data],
+        np.array([r["vector"] for r in data], dtype=np.float64),
+        {
+            str(int(r["id"])): json.loads(r["metadata"])
+            for r in data
+            if has_meta and r["metadata"]
+        },
+        adj,
+        params,
     )
-    p = {
-        "dim": dim,
-        "M": 16,
-        "ef_construction": 200,
-        "ef_search": 50,
-        "ml": 1.4426950408889634,
-        "max_elements": 1_000_000,
-        "entry_point": int(entry["id"]) if entry is not None else None,
-        "current_id": (max(int(r["id"]) for r in data) + 1) if data else 0,
-        **(params or {}),
-    }
-    nodes = {}
-    mat = []
-    store = {}
-    for i, r in enumerate(data):
-        nid = int(r["id"])
-        level = int(r["level"]) if "level" in cols and r["level"] is not None else 0
-        conns = adj.get(nid, {0: []})
-        nodes[str(nid)] = {
-            "id": nid,
-            "level": level,
-            "connections": {str(lv): list(ds) for lv, ds in conns.items()},
-            "vector_offset": i,
-        }
-        mat.append(np.asarray(r["vector"], dtype=np.float64))
-        if "metadata" in cols and r["metadata"]:
-            store[str(nid)] = json.loads(r["metadata"])
-    p["nodes"] = nodes
-    with open(os.path.join(path, INDEX_FILE), "wb") as f:
-        f.write(msgpack_encode(p))
-    if mat:
-        X = np.vstack(mat)
-        with open(os.path.join(path, VECTORS_FILE), "wb") as f:
-            f.write(struct.pack("II", *X.shape))
-            f.write(X.tobytes())
-    meta = {
-        "metadata_store": store,
-        "total_nodes": len(nodes),
-        "dimension": dim,
-        "total_searches": 0,
-        "total_insertions": len(nodes),
-    }
-    with open(os.path.join(path, METADATA_FILE), "w") as f:
-        json.dump(meta, f, indent=2)

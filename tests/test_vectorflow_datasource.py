@@ -2,6 +2,9 @@
 (PySpark 4 Python DataSource API). Reference layout: three files,
 `core/storage/engine.py:19-21`."""
 
+import json
+import os
+import struct
 import warnings
 
 import pytest
@@ -9,11 +12,22 @@ from pyspark.sql import functions as F
 
 from hnsw_vector_db_spark.sources.vectorflow_datasource import register
 from hnsw_vector_db_spark.sources.vectorflow_snapshot import (
-    _load_raw,
+    msgpack_decode,
     read_snapshot_edges,
     read_snapshot_vectors,
     write_snapshot,
 )
+
+
+def _files(path):
+    """(decoded index.msgpack, vectors.bin bytes, decoded metadata.json)."""
+    with open(os.path.join(path, "index.msgpack"), "rb") as f:
+        graph = msgpack_decode(f.read())
+    with open(os.path.join(path, "vectors.bin"), "rb") as f:
+        vbin = f.read()
+    with open(os.path.join(path, "metadata.json")) as f:
+        meta = json.load(f)
+    return graph, vbin, meta
 
 
 @pytest.fixture(scope="module")
@@ -57,18 +71,62 @@ def test_write_roundtrip_exact(spark, vectors, tmp_path):
     dst = str(tmp_path / "out")
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
-        vectors.write.format("vectorflow").mode("overwrite").save(dst)
+        vectors.write.format("vectorflow").mode("overwrite").option(
+            "ef_search", "64"
+        ).save(dst)
     back = spark.read.format("vectorflow").load(dst)
     a = sorted((r["id"], tuple(r["vector"]), r["level"], r["metadata"]) for r in back.collect())
     b = sorted((r["id"], tuple(r["vector"]), r["level"], r["metadata"]) for r in vectors.collect())
     assert a == b
     # the written layout is the reference's own: params + dense matrix +
     # metadata_store, entry_point a max-level node with min-id tiebreak
-    graph, X, meta = _load_raw(dst)
-    assert X.shape == (100, 4)
+    graph, vbin, meta = _files(dst)
+    assert struct.unpack("II", vbin[:8]) == (100, 4) and len(vbin) == 8 + 100 * 4 * 8
     assert graph["entry_point"] == 2  # ids with level==2: 2, 5, 8, ...
     assert meta["metadata_store"]["7"] == {"tag": 2}
     assert graph["current_id"] == 100 and graph["dim"] == 4
+    assert graph["ef_search"] == 64 and graph["M"] == 16
+
+
+def test_both_writers_write_the_same_files(spark, vectors, tmp_path):
+    a, b = str(tmp_path / "fn"), str(tmp_path / "sink")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        write_snapshot(a, vectors)
+        vectors.write.format("vectorflow").mode("overwrite").save(b)
+    assert _files(a) == _files(b)
+
+
+def test_write_snapshot_rejects_duplicate_id(spark, vectors, tmp_path):
+    dst = str(tmp_path / "dup")
+    with pytest.raises(ValueError, match="duplicate id"):
+        write_snapshot(dst, vectors.union(vectors.filter("id = 7")))
+    assert not os.path.exists(os.path.join(dst, "index.msgpack"))
+
+
+def test_write_snapshot_capacity_guard(spark, vectors, tmp_path):
+    dst = str(tmp_path / "cap")
+    with pytest.raises(ValueError, match="max_elements=10"):
+        write_snapshot(dst, vectors, params={"max_elements": 10})
+    assert not os.path.exists(os.path.join(dst, "index.msgpack"))
+
+
+def test_empty_table_roundtrip(spark, vectors, tmp_path):
+    """Both writers write all three files for an empty table, with a
+    (0, 0) matrix header, and it reads back empty."""
+    empty = vectors.limit(0)
+    a, b = str(tmp_path / "fn"), str(tmp_path / "sink")
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")
+        write_snapshot(a, empty)
+        empty.write.format("vectorflow").mode("overwrite").save(b)
+    graph, vbin, meta = _files(a)
+    assert _files(b) == (graph, vbin, meta)
+    assert vbin == struct.pack("II", 0, 0)
+    assert graph["nodes"] == {} and graph["entry_point"] is None
+    assert graph["current_id"] == 0 and meta["total_nodes"] == 0
+    assert read_snapshot_vectors(spark, a).count() == 0
+    assert read_snapshot_edges(spark, a).count() == 0
 
 
 def test_append_to_existing_snapshot_rejected(spark, vectors, snapshot):
