@@ -18,17 +18,31 @@ the engine's operators so switching is mechanical:
 Storage is LOG-STRUCTURED (the Spark-native answer to the reference's
 Raft command log, `distributed/raft/node.py:26-31`): every mutation
 appends parquet rows stamped with a monotonically increasing version
-from ``_meta.json``; reads resolve last-write-wins + tombstones with
-one keyed window; :meth:`compact` folds the log into a fresh
+from ``_meta.json``; :meth:`compact` folds the log into a fresh
 generation. Mutations are SINGLE-WRITER by contract — exactly the
 reference's model, whose every index op serializes under one global
-RLock (`core/hnsw/graph.py:70`); readers are snapshot-consistent
-against immutable parquet.
+RLock (`core/hnsw/graph.py:70`).
+
+Reads follow the commit record: every read re-reads ``_meta.json``
+(about 100 bytes), so a handle opened before another handle's write or
+:meth:`compact` reads the committed version from the live generation.
+The log is resolved ONCE per committed version: the first read of a
+version runs the last-write-wins + tombstone window (one keyed window)
+and materializes the result with ``localCheckpoint()``; the handle holds
+that snapshot, and every later read at that version (search, count,
+the write paths' existence and capacity checks, stats, compact,
+search_approx) scans it. A replaced snapshot's blocks are released
+explicitly, so a frame returned at one version must be collected before
+the handle reads a later one (reading it after that fails: its blocks
+are gone); an empty log is not materialized. ``cache()`` is not used:
+Spark's cache manager would match a later read of the same log
+directory against the cached plan and serve the old version.
 
 Scale: appends are blind writes; the resolve window shuffles on the id
-key only; search is the zero-shuffle ``knn_point`` scan (or the
-persisted-index ANN path via :meth:`build_index` / :meth:`search_approx`
-for corpora where a scan is too slow).
+key only, once per version; search is the zero-shuffle ``knn_point``
+scan of the held snapshot, one job (or the persisted-index ANN path via
+:meth:`build_index` / :meth:`search_approx` for corpora where a scan is
+too slow).
 """
 
 from __future__ import annotations
@@ -43,6 +57,7 @@ from pyspark.sql import functions as F
 from hnsw_vector_db_spark.operators.table import validate_k, validate_vectors
 
 _LOG_SCHEMA = "id long, vector array<double>, metadata string, _version long, _op string"
+_TABLE_SCHEMA = "id long, vector array<double>, metadata string"
 
 
 class VectorTable:
@@ -56,8 +71,10 @@ class VectorTable:
             raise FileNotFoundError(
                 f"not a VectorTable (no _meta.json): {path}; use VectorTable.create"
             )
-        with open(self._meta_path) as f:
-            self.meta = json.load(f)
+        self._refresh()
+        # (version, resolved rows, the materialized RDD or None) of the
+        # held snapshot
+        self._snap: tuple[int, DataFrame, object] | None = None
 
     # -- lifecycle ---------------------------------------------------------
     @classmethod
@@ -109,6 +126,11 @@ class VectorTable:
         vt.batch_insert(vectors)
         return vt
 
+    def _refresh(self) -> None:
+        """Re-read the commit record."""
+        with open(self._meta_path) as f:
+            self.meta = json.load(f)
+
     def _save_meta(self) -> None:
         with open(self._meta_path, "w") as f:
             json.dump(self.meta, f)
@@ -116,29 +138,39 @@ class VectorTable:
     def _log_dir(self) -> str:
         return os.path.join(self.path, f"log-{self.meta['log_gen']}")
 
-    def _read_log(self) -> DataFrame:
+    def _resolve(self) -> tuple[DataFrame, object]:
+        """The log resolved at the committed version: last write per id
+        wins, tombstones drop the id. One keyed window, materialized; an
+        empty log gives an empty frame and no RDD."""
         d = self._log_dir()
-        if os.path.exists(d) and any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
-            return self.spark.read.schema(_LOG_SCHEMA).parquet(d)
-        return self.spark.createDataFrame([], _LOG_SCHEMA)
+        if not (os.path.exists(d) and any(f.endswith(".parquet") for f in os.listdir(d))):
+            return self.spark.createDataFrame([], _TABLE_SCHEMA), None
+        log = self.spark.read.schema(_LOG_SCHEMA).parquet(d)
+        w = Window.partitionBy("id").orderBy(F.col("_version").desc())
+        snap = (
+            log.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") == 1)
+            .filter(F.col("_op") != "delete")
+            .select("id", "vector", "metadata")
+            .localCheckpoint()
+        )
+        return snap, snap._jdf.queryExecution().analyzed().rdd()
 
     def _append(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self._log_dir())
 
     # -- reads -------------------------------------------------------------
     def table(self) -> DataFrame:
-        """The resolved current state: last write per id wins, tombstones
-        drop the id. One keyed window over the log."""
-        log = self._read_log()
-        w = Window.partitionBy("id").orderBy(F.col("_version").desc())
-        latest = log.withColumn("_rn", F.row_number().over(w)).filter(
-            F.col("_rn") == 1
-        )
-        return latest.filter(F.col("_op") != "delete").select(
-            "id", "vector", "metadata"
-        )
+        """The resolved current state (id, vector, metadata) at the
+        committed version: the held snapshot, built on the first read of
+        a version and released when a later version replaces it."""
+        self._refresh()
+        version = self.meta["version"]
+        if self._snap is None or self._snap[0] != version:
+            if self._snap is not None and self._snap[2] is not None:
+                self._snap[2].unpersist(False)
+            self._snap = (version, *self._resolve())
+        return self._snap[1]
 
     def count(self) -> int:
         return self.table().count()
@@ -150,20 +182,22 @@ class VectorTable:
         real ingest (the reference's batch endpoint is itself a loop of
         these, `server.py:208-220`; ours is genuinely set-oriented)."""
         vec = [float(x) for x in vector]
-        if self.meta["dim"] is None:
-            self.meta["dim"] = len(vec)  # first-insert inference
-        if len(vec) != self.meta["dim"]:
-            raise ValueError(
-                f"dimension mismatch: expected {self.meta['dim']}, got {len(vec)}"
-            )
+        self._refresh()
+        dim = self.meta["dim"]
+        if dim is None:
+            dim = len(vec)  # first-insert inference
+        if len(vec) != dim:
+            raise ValueError(f"dimension mismatch: expected {dim}, got {len(vec)}")
         # capacity guard (graph.py:129-130) — an overwrite of an EXISTING
         # external id doesn't grow the table, so it passes at the cap
-        if self.count() >= self.meta["max_elements"]:
+        current = self.table()
+        if current.count() >= self.meta["max_elements"]:
             grows = external_id is None or (
-                self.table().filter(F.col("id") == int(external_id)).count() == 0
+                current.filter(F.col("id") == int(external_id)).count() == 0
             )
             if grows:
                 raise RuntimeError("index is full (max_elements reached)")
+        self.meta["dim"] = dim
         vid = int(external_id) if external_id is not None else self.meta["next_id"]
         self.meta["next_id"] = max(self.meta["next_id"], vid + 1)
         self.meta["version"] += 1
@@ -192,11 +226,13 @@ class VectorTable:
         version; the reference's loop semantics need an ordered stream —
         send ordered duplicates as separate batches)."""
         src = rows
-        if self.meta["dim"] is None:
+        self._refresh()
+        dim = self.meta["dim"]
+        if dim is None:
             first = src.filter(F.col(vector_col).isNotNull()).select(vector_col).first()
             if first is None:  # nothing inferable: every row is a reject
                 return {"inserted": 0, "failed": src.count()}
-            self.meta["dim"] = len(first[0])
+            dim = len(first[0])
         cols = [F.col(vector_col).cast("array<double>").alias("vector")]
         if id_col in src.columns:
             cols.insert(0, F.col(id_col).cast("long").alias("id"))
@@ -207,14 +243,14 @@ class VectorTable:
         else:
             cols.append(F.lit("{}").alias("metadata"))
         src = src.select(*cols)
-        valid, _rejects = validate_vectors(src, self.meta["dim"], "vector")
+        valid, _rejects = validate_vectors(src, dim, "vector")
         # ONE job answers every up-front question the old code asked with
         # three (dup witness, src count, valid agg — r12, guide §1.2): a
         # per-id partial aggregate (validity is a row-level flag, so it
         # folds into the same pass), then one global aggregate over it.
         _vok = (
             F.col("vector").isNotNull()
-            & (F.size("vector") == self.meta["dim"])
+            & (F.size("vector") == dim)
         ).cast("long")
         per_id = src.groupBy("id").agg(
             F.count(F.lit(1)).alias("_c"),
@@ -286,6 +322,7 @@ class VectorTable:
             .drop("_rn")
         )
         batch = replacing.unionByName(admitted)
+        self.meta["dim"] = dim
         self.meta["version"] += 1
         out = batch.select(
             "id",
@@ -326,11 +363,13 @@ class VectorTable:
         needs; readers see an identical table before and after, and the
         superseded generation's files are REMOVED once the new one is
         fully written (single-writer contract — don't compact while a
-        long-running reader still scans the old generation)."""
+        long-running reader still scans the old generation). The held
+        snapshot stays: compaction does not change the version or the
+        rows, so the next read does not resolve again."""
         import shutil
 
-        old_dir = self._log_dir()
         resolved = self.table()
+        old_dir = self._log_dir()
         self.meta["log_gen"] += 1
         out = resolved.select(
             "id",
@@ -342,7 +381,7 @@ class VectorTable:
         out.write.mode("overwrite").parquet(self._log_dir())
         self._save_meta()  # new generation is live before the old one goes
         shutil.rmtree(old_dir, ignore_errors=True)
-        return self._read_log().count()
+        return resolved.count()
 
     # -- queries -----------------------------------------------------------
     def search(self, query, k: int = 10, where=None) -> DataFrame:
@@ -360,10 +399,9 @@ class VectorTable:
         t = self.table()
         if where is not None:
             t = t.filter(where)
-        # single pass: the knn_point plan (project distance ->
-        # TakeOrderedAndProject) with metadata carried through, so the
-        # log-resolution window runs ONCE per query, not once for the
-        # scan and again for a metadata join
+        # single pass over the held snapshot: the knn_point plan (project
+        # distance -> TakeOrderedAndProject) with metadata carried
+        # through, one job and no shuffle at an unchanged version
         scored = with_distance(
             t, [float(x) for x in query], self.meta["metric"], "vector"
         )
@@ -403,6 +441,7 @@ class VectorTable:
         which the reference happily serves — we refuse)."""
         from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search
 
+        current = self.table()
         if "centroids" not in self.meta:
             raise RuntimeError("no index: call build_index() first")
         if self.meta.get("index_version") != self.meta["version"]:
@@ -416,7 +455,7 @@ class VectorTable:
         )
         allowed = None
         if where is not None:
-            allowed = self.table().filter(where).select(F.col("id"))
+            allowed = current.filter(where).select(F.col("id"))
         hits = hnsw_search(
             index, queries, np.array(self.meta["centroids"], dtype=np.float64),
             k=k, ef=ef, nprobe=nprobe, metric=self.meta["metric"], id_col="id",
@@ -424,7 +463,7 @@ class VectorTable:
         )
         return (
             hits.select(F.col("id"), F.col("dist"))
-            .join(self.table().select("id", "metadata"), "id", "left")
+            .join(current.select("id", "metadata"), "id", "left")
             .orderBy(F.col("dist").asc(), F.col("id").asc())
         )
 

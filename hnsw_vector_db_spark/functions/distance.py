@@ -13,12 +13,20 @@ column never crosses the Python boundary. Inputs are cast elementwise to
 DOUBLE first (the reference computes in float64 too, `engine.py:82`), which
 also makes results bit-comparable with a DuckDB oracle casting ``::DOUBLE[]``.
 
+The distance from a named column to a constant query vector, which every
+single-query search projects, is :func:`distance_to_const`: the same tree
+as the builders, written as one SQL text and parsed by one ``F.expr``.
+:func:`lit_double_array` writes its constant arrays the same way,
+non-finite values included.
+
 The two operators that broadcast a small side to numpy blocks (the BLAS
 kNN and centroid assignment) share :func:`block_distances`, the same four
 metrics over float64 matrices.
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import Column
@@ -31,6 +39,23 @@ def _d(c: Column | str) -> Column:
     return c.cast("array<double>")
 
 
+def _double_sql(v: float) -> str:
+    """One DOUBLE as SQL text. Finite values are ``repr`` (the shortest
+    round-trip form, which the parser converts IEEE-exactly) with a ``D``
+    suffix: a bare ``0.0`` parses as DECIMAL. NaN and the infinities have
+    no literal, so they are string casts, which constant folding turns
+    into the same double literals."""
+    if math.isnan(v):
+        return "CAST('NaN' AS DOUBLE)"
+    if math.isinf(v):
+        return "CAST('Infinity' AS DOUBLE)" if v > 0 else "CAST('-Infinity' AS DOUBLE)"
+    return f"{v!r}D"
+
+
+def _double_array_sql(vals: list[float]) -> str:
+    return "array(" + ",".join(_double_sql(v) for v in vals) + ")"
+
+
 def lit_double_array(values) -> Column:
     """``array(<double literals>)`` built in ONE py4j round-trip.
 
@@ -38,19 +63,12 @@ def lit_double_array(values) -> Column:
     ``F.array(*[F.lit(float(v)) for v in vs])`` pays ~2 py4j calls per
     element — ~0.25 s per 64-dim query vector and ~1 s for a dim-1024
     table, per CALL, on the driver. One ``F.expr`` parse of the literal
-    text builds the IDENTICAL tree (CreateArray of double Literals;
-    ``repr`` is the shortest round-trip form and the SQL parser converts
-    it with the same IEEE-exact path), so every downstream value is
-    bit-unchanged. Non-finite values fall back to the per-element form
-    (``inf``/``nan`` have no SQL literal)."""
-    import math
-
+    text (:func:`_double_sql` per element, non-finite values included)
+    collects to the same doubles, -0.0, NaN and the infinities too."""
     vals = [float(v) for v in values]
     if not vals:
         return F.array()
-    if not all(math.isfinite(v) for v in vals):
-        return F.array(*[F.lit(v) for v in vals])
-    return F.expr("array(" + ",".join(f"{v!r}D" for v in vals) + ")")
+    return F.expr(_double_array_sql(vals))
 
 
 def lit_long_array(values) -> Column:
@@ -147,25 +165,6 @@ def dot_product(a: Column | str, b: Column | str) -> Column:
     return -dot_raw(a, b)
 
 
-def cosine_to_const(a: Column | str, query: list[float]) -> Column:
-    """Cosine distance to a known-constant query vector.
-
-    Same semantics as :func:`cosine` (incl. the zero-norm guard,
-    `graph.py:33-34`) but the query norm is a Python-computed literal, so
-    the per-row work is one zip_with/aggregate instead of three.
-    """
-    import math
-
-    qn = math.sqrt(sum(v * v for v in query))
-    if qn == 0.0:
-        return F.lit(1.0)
-    q = lit_double_array(query)
-    na = norm(a)
-    return F.when(na == 0.0, F.lit(1.0)).otherwise(
-        F.lit(1.0) - dot_raw(a, q) / (na * F.lit(qn))
-    )
-
-
 METRICS = {
     "euclidean": euclidean,
     "cosine": cosine,
@@ -178,13 +177,68 @@ METRICS = {
 def distance(a: Column | str, b: Column | str, metric: str = "euclidean") -> Column:
     """Name-string metric dispatch (reference `graph.py:53,65`
     ``getattr(DistanceMetric, distance_metric)``)."""
+    return _metric_fn(metric)(a, b)
+
+
+def _metric_fn(metric: str):
     try:
-        fn = METRICS[metric]
+        return METRICS[metric]
     except KeyError:
         raise ValueError(
             f"unknown metric {metric!r}; one of {sorted(METRICS)}"
         ) from None
-    return fn(a, b)
+
+
+def _sql_name(name: str) -> str:
+    """A column name as SQL text, read the way ``F.col`` reads it: dots
+    separate nested fields unless the caller already back-quoted it."""
+    if "`" in name:
+        return name
+    return ".".join(f"`{part}`" for part in name.split("."))
+
+
+def _sum_sql(a: str, b: str, term: str) -> str:
+    """``aggregate(zip_with(a, b, term), 0.0D, +)``: the text of
+    :func:`dot_raw` and its siblings, left-to-right like theirs."""
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> {term}), 0.0D, (acc, v) -> acc + v)"
+
+
+def distance_to_const(vector_col: str, query, metric: str = "euclidean") -> Column:
+    """Distance from the named array column to a constant query vector,
+    as ONE SQL text parsed by one ``F.expr``.
+
+    The tree is the one the Column builders above make for
+    ``distance(F.col(vector_col), lit_double_array(query), metric)``,
+    operation for operation, so the collected doubles are equal (a row of
+    another length gives null, as there). Built through the Column API
+    a 64-dim query's cosine tree cost 36-44 ms of driver time per call in
+    py4j round trips on a 4-core x86 host; as text it costs 0.4 ms. For
+    cosine the query norm is computed here on the driver (Catalyst does
+    not constant-fold ``aggregate`` over a literal array, so it would
+    re-reduce the query per row), with the reference's zero-norm guard
+    (`graph.py:33-34`): a zero query is 1.0 for every row."""
+    _metric_fn(metric)  # an unknown name raises here
+    vals = [float(v) for v in query]
+    a = f"CAST({_sql_name(vector_col)} AS ARRAY<DOUBLE>)"
+    q = f"CAST({_double_array_sql(vals)} AS ARRAY<DOUBLE>)"
+    if metric == "cosine":
+        qn = math.sqrt(sum(v * v for v in vals))
+        if qn == 0.0:
+            return F.lit(1.0)
+        na = f"sqrt({_sum_sql(a, a, 'x * y')})"
+        text = (
+            f"CASE WHEN {na} = 0.0D THEN 1.0D "
+            f"ELSE 1.0D - {_sum_sql(a, q, 'x * y')} / ({na} * {_double_sql(qn)}) END"
+        )
+    elif metric == "dot_product":
+        text = f"-({_sum_sql(a, q, 'x * y')})"
+    elif metric == "manhattan":
+        text = _sum_sql(a, q, "abs(x - y)")
+    else:
+        text = _sum_sql(a, q, "(x - y) * (x - y)")
+        if metric == "euclidean":
+            text = f"sqrt({text})"
+    return F.expr(text)
 
 
 def unit_rows(X: np.ndarray) -> np.ndarray:

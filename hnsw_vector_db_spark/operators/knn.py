@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from hnsw_vector_db_spark.functions.distance import (
     block_distances,
     distance,
+    distance_to_const,
     lit_double_array,
     unit_rows,
 )
@@ -53,19 +54,12 @@ def with_distance(
 ) -> DataFrame:
     """Project the distance to a constant query vector as a new column.
 
-    For cosine, the query-side norm is precomputed driver-side (Catalyst
-    does not constant-fold ``aggregate`` over a literal array, so the naive
-    expression would re-reduce the 64-element literal per row — 3x the
-    flops and a 3x-bigger codegen body).
+    The one builder for constant-query distances: the column is
+    :func:`~hnsw_vector_db_spark.functions.distance.distance_to_const`,
+    one SQL text parsed once, with the cosine query norm computed on the
+    driver.
     """
-    from hnsw_vector_db_spark.functions.distance import cosine_to_const
-
-    q = lit_double_array(query)
-    if metric == "cosine":
-        expr = cosine_to_const(F.col(vector_col), [float(v) for v in query])
-    else:
-        expr = distance(F.col(vector_col), q, metric)
-    return df.withColumn(dist_col, expr)
+    return df.withColumn(dist_col, distance_to_const(vector_col, query, metric))
 
 
 def knn_point(
@@ -448,13 +442,14 @@ def matryoshka_knn(
         .limit(shortlist)
         .select(id_col)
     )
-    qarr = lit_double_array(q)
     # rank on the UNROUNDED distance (matches the oracle's exact ordering;
     # rounding first can flip the top-k set near the k-th position), round
     # only in the output projection
     return (
-        vectors.join(F.broadcast(short), id_col, "left_semi")
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            vectors.join(F.broadcast(short), id_col, "left_semi"),
+            q, metric, vector_col, "_dist",
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))

@@ -42,6 +42,7 @@ from hnsw_vector_db_spark.functions.distance import (
     select_normalized,
     unit_rows,
 )
+from hnsw_vector_db_spark.operators.knn import with_distance
 
 
 # Cap on the collected right side for the Arrow pairwise kernel:
@@ -673,11 +674,11 @@ def ivf_topk(
     else:
         order = np.argsort(np.linalg.norm(centroids - qv, axis=1), kind="stable")
     cells = [int(c) for c in order[:nprobe]]
-    qarr = lit_double_array(qv)
     src = assigned if predicate is None else assigned.filter(predicate)
     return (
-        src.filter(F.col("cell").isin(cells))
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            src.filter(F.col("cell").isin(cells)), qv, metric, vector_col, "_dist"
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))
@@ -877,10 +878,11 @@ def pq_adc_rerank(
         codes, codebook, query, k=shortlist, n_subspaces=n_subspaces,
         dim=dim, id_col=id_col,
     ).select(id_col)
-    qarr = lit_double_array(query)
     return (
-        vectors.join(F.broadcast(short), id_col, "left_semi")
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            vectors.join(F.broadcast(short), id_col, "left_semi"),
+            query, metric, vector_col, "_dist",
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))
@@ -1035,12 +1037,13 @@ def ivf_pq_topk(
         .limit(shortlist)
         .select(id_col)
     )
-    qarr = lit_double_array(q)
     # rank on the unrounded distance; round only in the output projection
     # (rounding before the top-k can flip the set at the k-th boundary)
     return (
-        vectors.join(F.broadcast(short), id_col, "left_semi")
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            vectors.join(F.broadcast(short), id_col, "left_semi"),
+            q, metric, vector_col, "_dist",
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))
@@ -1181,8 +1184,10 @@ def sq_knn(
     )
     # rank on the unrounded exact distance; round only in the projection
     return (
-        vectors.join(F.broadcast(short), id_col, "left_semi")
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            vectors.join(F.broadcast(short), id_col, "left_semi"),
+            query, metric, vector_col, "_dist",
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))
@@ -1319,10 +1324,11 @@ def bq_knn(
         .limit(shortlist)
         .select(id_col)
     )
-    qarr = lit_double_array(query)
     return (
-        vectors.join(F.broadcast(short), id_col, "left_semi")
-        .withColumn("_dist", distance(F.col(vector_col), qarr, metric))
+        with_distance(
+            vectors.join(F.broadcast(short), id_col, "left_semi"),
+            query, metric, vector_col, "_dist",
+        )
         .orderBy(F.col("_dist").asc(), F.col(id_col).asc())
         .limit(k)
         .select(id_col, F.round(F.col("_dist"), 6).alias("dist"))
@@ -1498,10 +1504,9 @@ def radius_search_exact(
     edge."""
     if radius < 0:
         raise ValueError(f"radius must be >= 0, got {radius}")
-    q = lit_double_array(query)
-    d = distance(F.col(vector_col), q, "euclidean")
     return (
-        vectors.select(F.col(id_col), d.alias("dist"))
+        with_distance(vectors, query, "euclidean", vector_col)
+        .select(F.col(id_col), "dist")
         .filter(F.col("dist") <= F.lit(float(radius)))
     )
 

@@ -206,3 +206,133 @@ def test_compact_removes_superseded_generation(spark, vt):
     vt.compact()
     assert not os.path.exists(old_dir)
     assert vt.count() == 1
+
+
+def _brute(rows, q, metric, k, keep=lambda vid, md: True):
+    """Numpy top-k over {id: (vector, metadata)} for the reference metrics."""
+    import numpy as np
+
+    live = [(i, np.asarray(v)) for i, (v, md) in sorted(rows.items()) if keep(i, md)]
+    q = np.asarray(q)
+    scored = []
+    for i, v in live:
+        if metric == "euclidean":
+            d = float(np.linalg.norm(v - q))
+        elif metric == "manhattan":
+            d = float(np.abs(v - q).sum())
+        elif metric == "dot_product":
+            d = float(-(v @ q))
+        else:
+            nv, nq = np.linalg.norm(v), np.linalg.norm(q)
+            d = 1.0 if nv == 0 or nq == 0 else float(1.0 - (v @ q) / (nv * nq))
+        scored.append((d, i))
+    return sorted(scored)[:k]
+
+
+@pytest.mark.parametrize("metric", ["cosine", "euclidean", "manhattan", "dot_product"])
+def test_search_after_each_write_matches_brute_force(spark, tmp_path, metric):
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    vt = VectorTable.create(spark, str(tmp_path / metric), dim=6, metric=metric)
+    model = {}
+
+    def put(i):
+        v = rng.standard_normal(6).tolist()
+        model[i] = (v, json.dumps({"tag": i % 3}))
+        return Row(id=i, vector=v, metadata=model[i][1])
+
+    vt.batch_insert(spark.createDataFrame([put(i) for i in range(20)]))
+    even = F.get_json_object("metadata", "$.tag").cast("int") % 2 == 0
+
+    def check(step):
+        q = rng.standard_normal(6).tolist()
+        for where, keep in (
+            (None, lambda i, md: True),
+            (even, lambda i, md: json.loads(md)["tag"] % 2 == 0),
+        ):
+            got = vt.search(q, k=5, where=where).collect()
+            want = _brute(model, q, metric, 5, keep)
+            assert [r["id"] for r in got] == [i for _, i in want], step
+            assert [r["dist"] for r in got] == pytest.approx([d for d, _ in want], abs=1e-9)
+            assert all(r["metadata"] == model[r["id"]][1] for r in got)
+
+    check("batch_insert")
+    v = rng.standard_normal(6).tolist()
+    vt.insert(v, external_id=3, metadata={"tag": 7})  # overwrite
+    model[3] = (v, json.dumps({"tag": 7}))
+    check("insert")
+    assert vt.delete([5, 8]) == 2
+    del model[5], model[8]
+    check("delete")
+    out = vt.batch_insert(spark.createDataFrame([put(i) for i in (1, 30, 31)]))
+    assert out == {"inserted": 3, "failed": 0}
+    check("batch_insert again")
+    assert vt.compact() == len(model)
+    check("compact")
+
+
+def test_warm_search_is_one_job_without_shuffle(spark, tmp_path):
+    from hnsw_vector_db_spark.plans.explain import physical_plan
+
+    vt = VectorTable.create(spark, str(tmp_path / "t"), metric="cosine")
+    vt.batch_insert(
+        spark.createDataFrame([Row(id=i, vector=[float(i), 1.0, -2.0]) for i in range(50)])
+    )
+    vt.insert([1.0, 2.0, 3.0], external_id=7)
+    vt.search([1.0, 0.0, 0.0], k=3).collect()  # the first read of the version
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobGroup("warm-search", "warm search")
+    try:
+        hits = vt.search([0.0, 1.0, 0.0], k=3)
+        hits.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+        jsc.statusStore().jobsList(None)
+    )
+    groups = [j.jobGroup() for j in jobs]
+    assert sum(1 for g in groups if g.isDefined() and g.get() == "warm-search") == 1
+    plan = physical_plan(hits)
+    assert "Exchange" not in plan and "Window" not in plan, plan
+
+
+def test_reader_handle_follows_the_commit_record(spark, tmp_path):
+    path = str(tmp_path / "t")
+    writer = VectorTable.create(spark, path, metric="euclidean")
+    writer.insert([0.0, 0.0], external_id=1)
+    reader = VectorTable.open(spark, path)
+    assert reader.count() == 1
+    writer.insert([3.0, 4.0], external_id=2)
+    assert reader.count() == 2
+    writer.compact()  # removes the generation the reader last scanned
+    assert reader.count() == 2
+    assert [r["id"] for r in reader.search([3.0, 4.0], k=2).collect()] == [2, 1]
+    writer.delete([1])
+    assert [r["id"] for r in reader.search([0.0, 0.0], k=2).collect()] == [2]
+    # the reader's own write mints past the writer's ids
+    assert reader.insert([1.0, 1.0]) == 3
+    assert writer.count() == 2
+
+
+def test_snapshots_are_released_when_replaced(spark, tmp_path):
+    jsc = spark.sparkContext._jsc.sc()
+
+    def persisted():
+        ids = jsc.getPersistentRDDs().keys().mkString(",")
+        return {int(x) for x in ids.split(",")} if ids else set()
+
+    base = persisted()
+    vt = VectorTable.create(spark, str(tmp_path / "t"), metric="euclidean")
+    vt.insert([0.0, 1.0])
+    held = set()
+    for i in range(10):
+        vt.insert([float(i), 2.0])
+        vt.search([0.0, 0.0], k=2).collect()
+        new = persisted() - base
+        held.add(vt._snap[2].id())
+        # exactly one snapshot held: this version's, none of the replaced
+        assert new == {vt._snap[2].id()}, (i, new, held)
+    assert len(held) == 10

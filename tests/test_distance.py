@@ -112,3 +112,55 @@ def test_squared_euclidean_ordering(pair_df):
     ).collect()
     for r in rows:
         assert r["se"] == pytest.approx(r["e"] ** 2, rel=1e-9)
+
+
+METRIC_NAMES = ["cosine", "euclidean", "manhattan", "dot_product", "squared_euclidean"]
+
+
+@pytest.fixture(scope="module")
+def const_rows(spark):
+    """Random rows, a zero row, a wrong-length row and a null row."""
+    rows = [(i, RNG.randn(8).tolist()) for i in range(12)]
+    rows += [(12, [0.0] * 8), (13, [1.0] * 5), (14, None)]
+    return spark.createDataFrame(rows, "id long, v array<double>")
+
+
+@pytest.mark.parametrize("metric", METRIC_NAMES)
+@pytest.mark.parametrize("query", ["random", "zero"])
+@pytest.mark.parametrize("elem", ["double", "float"])
+def test_sql_text_distance_equals_column_builders(const_rows, metric, query, elem):
+    q = RNG.randn(8).tolist() if query == "random" else [0.0] * 8
+    df = const_rows.withColumn("v", F.col("v").cast(f"array<{elem}>"))
+    rows = df.select(
+        "id",
+        D.distance_to_const("v", q, metric).alias("text"),
+        D.distance(F.col("v"), D.lit_double_array(q), metric).alias("cols"),
+    ).collect()
+    assert len(rows) == 15
+    for r in rows:
+        assert r["text"] == r["cols"], (r["id"], r["text"], r["cols"])
+    wrong_length = next(r for r in rows if r["id"] == 13)
+    if not (metric == "cosine" and query == "zero"):
+        assert wrong_length["text"] is None
+
+
+def test_sql_text_distance_unknown_metric_raises():
+    with pytest.raises(ValueError, match="unknown metric"):
+        D.distance_to_const("v", [1.0], "chebyshev")
+
+
+def test_lit_double_array_non_finite_is_one_text(spark, monkeypatch):
+    import math
+
+    vals = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 5e-324, 1.5]
+    ref = F.array(*[F.lit(v) for v in vals])
+    # one F.expr parse, no per-element F.lit path
+    monkeypatch.setattr(D.F, "lit", None)
+    text = D.lit_double_array(vals)
+    monkeypatch.undo()
+    r = spark.range(1).select(text.alias("t"), ref.alias("r")).first()
+    assert len(r["t"]) == len(vals)
+    for a, b in zip(r["t"], r["r"]):
+        assert (math.isnan(a) and math.isnan(b)) or (
+            a == b and math.copysign(1.0, a) == math.copysign(1.0, b)
+        )
