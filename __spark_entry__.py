@@ -23,7 +23,7 @@ from hnsw_vector_db_spark.functions.text import (
     poly_hash,
     poly_hash_bulk,
 )
-from hnsw_vector_db_spark.functions.distance import lit_double_array
+from hnsw_vector_db_spark.functions.distance import lit_double_array, vector_matrix
 from hnsw_vector_db_spark.operators import dedup, events, relational, similarity, table, text_analysis
 from hnsw_vector_db_spark.operators.knn import knn_batch, knn_point
 from hnsw_vector_db_spark.operators.stats import group_stats, index_stats
@@ -2381,7 +2381,7 @@ def _hnsw_artifacts(
             "cell int, centroid array<double>",
         ).write.mode("overwrite").parquet(cent_dir)
     crows = spark.read.parquet(cent_dir).orderBy("cell").collect()
-    centroids = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    centroids = vector_matrix([r["centroid"] for r in crows], "centroid")
     return spark.read.parquet(idx_dir), centroids
 
 

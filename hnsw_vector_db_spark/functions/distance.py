@@ -19,8 +19,9 @@ as the builders, written as one SQL text and parsed by one ``F.expr``.
 :func:`lit_double_array` writes its constant arrays the same way,
 non-finite values included.
 
-The two operators that broadcast a small side to numpy blocks (the BLAS
-kNN and centroid assignment) share :func:`block_distances`, the same four
+Every decode of a vector column into numpy is :func:`vector_matrix`. The
+two operators that broadcast a small side to numpy blocks (the BLAS kNN
+and centroid assignment) share :func:`block_distances`, the same four
 metrics over float64 matrices.
 """
 
@@ -239,6 +240,24 @@ def distance_to_const(vector_col: str, query, metric: str = "euclidean") -> Colu
         if metric == "euclidean":
             text = f"sqrt({text})"
     return F.expr(text)
+
+
+def vector_matrix(values, col: str) -> np.ndarray:
+    """Decode a vector column's cells (collected Row fields, or a pandas
+    Series inside a UDF) into the C-contiguous float64 ``(n, d)`` matrix
+    every exact and ANN kernel reads; ``(0, 0)`` for no rows. A null
+    vector or vectors of different lengths raise ``ValueError`` naming
+    ``col``, not numpy's nameless shape error."""
+    vals = list(values)
+    lens = [-1 if v is None else len(v) for v in vals]
+    if -1 in lens:
+        raise ValueError(f"vector column {col!r} has a null vector at row {lens.index(-1)}")
+    if len(set(lens)) > 1:
+        i = next(i for i, n in enumerate(lens) if n != lens[0])
+        raise ValueError(
+            f"vector column {col!r} mixes dimensions: row 0 has {lens[0]}, row {i} has {lens[i]}"
+        )
+    return np.array(vals, dtype=np.float64) if vals else np.zeros((0, 0))
 
 
 def unit_rows(X: np.ndarray) -> np.ndarray:

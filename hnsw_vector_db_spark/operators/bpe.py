@@ -480,8 +480,9 @@ def bpe_token_ids(
     # replaces the previous localCheckpoint job + separate
     # distinct-symbol collect job, and the word -> ids map is computed
     # driver-side and re-enters the plan as a parallelized local
-    # relation (broadcast-joined below) instead of a per-row
-    # map-lookup transform. Same vocab (distinct symbols, sorted), same
+    # relation joined below (a broadcast join only while the relation
+    # is under spark.sql.autoBroadcastJoinThreshold, otherwise a
+    # shuffle join) instead of a per-row map-lookup transform. Same vocab (distinct symbols, sorted), same
     # per-word id sequences, one less Spark job per call. Guarded by
     # the same cap class as bpe_train: over the cap we keep the fully
     # distributed two-job form.

@@ -59,7 +59,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_vector_db_spark.functions.distance import unit_rows
+from hnsw_vector_db_spark.functions.distance import unit_rows, vector_matrix
+from hnsw_vector_db_spark.operators.knn import top_k_per_query
 
 # Byte bound on the (B, n) visited masks of one search_batch chunk: a
 # cell of n nodes serves max(1, _VISITED_CHUNK_BYTES // n) queries at a
@@ -629,7 +630,7 @@ def hnsw_build(
         install_zip_guard()
         if pdf.empty:
             return pd.DataFrame(columns=INDEX_COLUMNS)
-        X = np.vstack(pdf[vector_col].to_numpy())
+        X = vector_matrix(pdf[vector_col], vector_col)
         index = LocalHNSW(m=m, ef_construction=ef_construction, metric=metric, seed=0)
         index.build(X)
         return pd.DataFrame([_index_row(key[0], pdf[id_col].to_numpy(), index)])
@@ -700,7 +701,7 @@ def hnsw_insert(
             return idx_pdf.reindex(columns=INDEX_COLUMNS) if not idx_pdf.empty else (
                 pd.DataFrame(columns=INDEX_COLUMNS)
             )
-        X_new = np.vstack(new_pdf[vector_col].to_numpy()).astype(np.float64)
+        X_new = vector_matrix(new_pdf[vector_col], vector_col)
         new_ids = new_pdf[id_col].to_numpy().astype(np.int64)
         order = np.argsort(new_ids, kind="stable")  # deterministic insert order
         X_new, new_ids = X_new[order], new_ids[order]
@@ -1036,7 +1037,7 @@ def hnsw_search(
     if qin:
         import pyarrow as pa
 
-        Q = np.array([list(r[query_vec_col]) for r in qin], dtype=np.float64)
+        Q = vector_matrix([r[query_vec_col] for r in qin], query_vec_col)
         cells = _route_cells(Q, np.asarray(centroids, dtype=np.float64), nprobe, metric)
         nb, dim = cells.shape[1], Q.shape[1]
         probed = np.unique(cells).tolist()
@@ -1073,7 +1074,7 @@ def hnsw_search(
         st = idx_pdf.iloc[0]
         local = _index_local(st)
         ids = np.asarray(st["ids"], dtype=np.int64)
-        Q = np.vstack(q_pdf[query_vec_col].to_numpy()).astype(np.float64)
+        Q = vector_matrix(q_pdf[query_vec_col], query_vec_col)
         nodes, dists = local.search_batch(Q, k_fetch, ef_eff)
         hit = nodes >= 0  # each row's hits come first, nearest first
         return pd.DataFrame(
@@ -1096,13 +1097,9 @@ def hnsw_search(
         candidates = candidates.join(
             allowed.select(id_col), id_col, "left_semi"
         )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, F.round("dist", 6).alias("dist"), "rank")
+    # rank on the unrounded distance; round only the output
+    return top_k_per_query(candidates, k, query_id_col, id_col).withColumn(
+        "dist", F.round("dist", 6)
     )
 
 

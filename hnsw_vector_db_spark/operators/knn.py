@@ -13,20 +13,16 @@ index-time artifact, not query semantics — Spark replaces it with:
   partition move to the driver-side merge. At 100 TB this is
   embarrassingly parallel and scan-bound.
 - ``knn_batch``: Q queries at once. The query side is broadcast (queries
-  are small by construction; the corpus never moves), distance computed in
-  codegen, then per-query top-k. For the top-k we use a window rank — AQE
-  handles the shuffle of (Q*k candidates, not Q*N: see below).
+  are small by construction; the corpus never moves), distance computed
+  in codegen, then one window rank per query.
+- ``knn_batch_twophase``: the same answer with a map-side BLAS top-k per
+  Arrow batch, so the rank window sees about k candidates per query per
+  batch instead of N.
+  Up to ``chunk_size`` queries reach the driver in one bounded collect;
+  only a larger Q streams in chunks, one corpus pass per chunk.
 
-Scale note on knn_batch: a naive crossJoin+window shuffles Q*N rows on
-query_id. We avoid that with map-side pre-pruning: after the broadcast
-join, a per-partition top-k (applied via groupBy(query_id, spark_partition)
-would still shuffle) — instead we rely on TakeOrderedAndProject semantics
-per query via the window ONLY over the candidate set already reduced by
-the broadcast-side filter. For very large Q, ``knn_batch_twophase``
-chunks the query set (``chunk_size``) and unions per-chunk corpus
-passes — a bounded driver collect by construction. The approximate
-variants (LSH/IVF, `similarity.py`) are the real scale path the
-reference's HNSW maps to.
+The approximate variants (LSH/IVF, `similarity.py`) are the real scale
+path the reference's HNSW maps to.
 """
 
 from __future__ import annotations
@@ -42,6 +38,7 @@ from hnsw_vector_db_spark.functions.distance import (
     distance_to_const,
     lit_double_array,
     unit_rows,
+    vector_matrix,
 )
 
 
@@ -60,6 +57,20 @@ def with_distance(
     driver.
     """
     return df.withColumn(dist_col, distance_to_const(vector_col, query, metric))
+
+
+def top_k_per_query(
+    scored: DataFrame, k: int, query_id_col: str = "query_id", id_col: str = "vec_id"
+) -> DataFrame:
+    """The k rows of smallest ``dist`` per query, ties to the lower id:
+    one ``row_number`` window over (dist, id) per ``query_id_col``.
+    Output (query_id, id, dist, rank)."""
+    w = Window.partitionBy(query_id_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(query_id_col, id_col, "dist", "rank")
+    )
 
 
 def knn_point(
@@ -115,14 +126,7 @@ def knn_batch(
     scored = joined.withColumn(
         "dist", distance(F.col(vector_col), F.col(query_vec_col), metric)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col)
 
 
 def knn_batch_twophase(
@@ -146,27 +150,24 @@ def knn_batch_twophase(
     instead of Q * N. Phase 2: one window rank over that small candidate
     set. Same exact semantics as ``knn_batch`` (same distances, same id
     tiebreak): the per-batch shortlist keeps EVERY candidate tied at the
-    k-th distance (argpartition alone could drop a tied lower-id row), so
+    k-th distance (a plain k-smallest cut could drop a tied lower-id row), so
     the final window's (dist, id) ordering sees all tie contenders. The
     plan trades the JVM-codegen distance for numpy's BLAS, which wins from
     a few hundred queries upward.
 
-    Query-side memory is BOUNDED, not assumed: the query set streams to
-    the driver via ``toLocalIterator`` in chunks of ``chunk_size`` rows
-    (default 100k ~= 51 MB of 64-d float64), each chunk ships to the
-    executors as a ``SparkContext.broadcast`` variable (torrent-
-    distributed once per executor — NEVER closure-captured into every
-    task binary) and runs its own corpus pass. With MULTIPLE chunks,
-    each chunk's candidate frame is eagerly materialized
-    (``localCheckpoint``) and its broadcast destroyed before the next
-    chunk is collected — the driver and executors genuinely hold one
-    chunk of Q at a time, at the price of per-chunk job launches and the
-    localCheckpoint caveat (executor loss during the final union
-    re-fails the query instead of recomputing). A 10M-query batch costs
-    100 bounded corpus passes rather than an unbounded collect — and
-    ``knn_auto`` routes such shapes here precisely because Q x N is too
-    big for the broadcast join, so the cap is enforced wherever
-    auto-routing lands.
+    Query-side memory is BOUNDED. Up to ``chunk_size`` queries (default
+    100k ~= 51 MB of 64-d float64) arrive in ONE ``session.bounded_collect``
+    (no job on a local relation) and ship as one ``SparkContext.broadcast``
+    (sent once per executor, not captured in every task) that lives as
+    long as the lazy plan. A larger batch streams through a local
+    iterator (one job per partition of the query frame) in chunks of
+    ``chunk_size``: each chunk runs its own corpus pass, is
+    materialized (``localCheckpoint``; executor loss during the final
+    union re-fails the query) and has its broadcast destroyed before the
+    next chunk is pulled, so driver and executors hold one chunk at a
+    time. ``knn_auto`` routes here when Q x N is too big for the
+    broadcast join. A null query vector, or query vectors of different
+    lengths, raise ``ValueError`` naming ``query_vec_col``.
     """
     import itertools
     from functools import reduce
@@ -174,7 +175,11 @@ def knn_batch_twophase(
     import numpy as np
     import pandas as pd
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+    from hnsw_vector_db_spark.session import (
+        bounded_collect,
+        ensure_package_shipped,
+        install_zip_guard,
+    )
 
     spark = vectors.sparkSession
     ensure_package_shipped(spark)
@@ -183,9 +188,8 @@ def knn_batch_twophase(
 
     def chunk_candidates(qrows):
         qids = np.array([r[0] for r in qrows], dtype=np.int64)
-        Q = np.array([list(r[1]) for r in qrows], dtype=np.float64)
-        Qm = unit_rows(Q) if metric == "cosine" else Q
-        bc = spark.sparkContext.broadcast((qids, Qm))
+        Q = vector_matrix([r[1] for r in qrows], query_vec_col)
+        bc = spark.sparkContext.broadcast((qids, unit_rows(Q) if metric == "cosine" else Q))
 
         def topk_block(batches):
             install_zip_guard()
@@ -193,62 +197,43 @@ def knn_batch_twophase(
             for pdf in batches:
                 if pdf.empty:
                     continue
-                X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
+                X = vector_matrix(pdf[vector_col], vector_col)
                 ids = pdf[id_col].to_numpy()
                 D = block_distances(X, b_Q, metric)  # (B, Q)
                 kk = min(k, D.shape[0])
-                part = np.argpartition(D, kk - 1, axis=0)  # (B, Q) first kk
-                out_qid, out_id, out_dist = [], [], []
-                for j in range(D.shape[1]):
-                    col = D[:, j]
-                    # tie-expand: include everything <= the kk-th smallest
-                    # distance, so ties at the boundary survive to the
-                    # final (dist, id) window rank — exact id-tiebreak
-                    # semantics
-                    kth = col[part[kk - 1, j]]
-                    rows = np.flatnonzero(col <= kth)
-                    out_qid.extend([b_qids[j]] * len(rows))
-                    out_id.extend(ids[rows])
-                    out_dist.extend(col[rows])
+                # tie-expand: keep everything <= each query's kk-th
+                # smallest distance, so ties at the boundary survive to
+                # the final (dist, id) window rank — exact id-tiebreak
+                # semantics. Rows come out query by query (the transpose).
+                kth = np.partition(D, kk - 1, axis=0)[kk - 1]
+                qj, rows = np.nonzero((D <= kth).T)
                 yield pd.DataFrame(
-                    {query_id_col: out_qid, id_col: out_id, "dist": out_dist}
+                    {query_id_col: b_qids[qj], id_col: ids[rows], "dist": D[rows, qj]}
                 )
 
         schema = f"{query_id_col} long, {id_col} long, dist double"
         df = vectors.select(id_col, vector_col).mapInPandas(topk_block, schema)
-        return df, bc
+        return df, bc, Q.shape[1]
 
-    qit = queries.select(query_id_col, query_vec_col).toLocalIterator()
-    cur = list(itertools.islice(qit, chunk_size))
-    if not cur:
+    q = queries.select(query_id_col, query_vec_col)
+    rows = bounded_collect(q, chunk_size, None)
+    if rows:
+        candidates, _bc, _ = chunk_candidates(rows)
+    elif rows is not None:
         return spark.createDataFrame(
             [], f"{query_id_col} long, {id_col} long, dist double, rank int"
         )
-    nxt = list(itertools.islice(qit, chunk_size))
-    if not nxt:
-        # single chunk: stay lazy — the one broadcast lives exactly as
-        # long as the query plan, no extra materialization
-        candidates, _bc = chunk_candidates(cur)
     else:
-        # multiple chunks: materialize each chunk's candidates eagerly so
-        # the chunk's broadcast can be destroyed before the next chunk is
-        # even collected — true one-chunk-at-a-time memory
-        parts = []
-        while cur:
-            df, bc = chunk_candidates(cur)
+        parts, dims, qit = [], set(), q.toLocalIterator()
+        while chunk := list(itertools.islice(qit, chunk_size)):
+            df, bc, dim = chunk_candidates(chunk)
+            dims.add(dim)
+            if len(dims) > 1:
+                raise ValueError(f"vector column {query_vec_col!r} mixes dimensions across chunks")
             parts.append(df.localCheckpoint(eager=True))
             bc.destroy()
-            cur = nxt
-            nxt = list(itertools.islice(qit, chunk_size)) if cur else []
         candidates = reduce(lambda a, b: a.unionByName(b), parts)
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return top_k_per_query(candidates, k, query_id_col, id_col)
 
 
 def estimated_rows(df: DataFrame) -> int:
@@ -346,14 +331,7 @@ def hard_negatives(
     scored = joined.withColumn(
         "dist", distance(F.col(vector_col), F.col(query_vec_col), metric)
     )
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col("dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col)
 
 
 def negative_samples(
@@ -546,7 +524,7 @@ def mmr_rerank(
             "diversity_penalty double, mmr_score double",
         )
     ids = np.array([r[id_col] for r in scored], dtype=np.int64)
-    X = np.array([r[vector_col] for r in scored], dtype=np.float64)
+    X = vector_matrix([r[vector_col] for r in scored], vector_col)
     norms = np.linalg.norm(X, axis=1)
     safe = np.where(norms == 0, 1.0, norms)
     U = X / safe[:, None]

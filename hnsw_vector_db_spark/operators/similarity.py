@@ -30,7 +30,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hnsw_vector_db_spark.functions.distance import (
@@ -41,17 +41,15 @@ from hnsw_vector_db_spark.functions.distance import (
     lit_long_array,
     select_normalized,
     unit_rows,
+    vector_matrix,
 )
-from hnsw_vector_db_spark.operators.knn import with_distance
+from hnsw_vector_db_spark.operators.knn import top_k_per_query, with_distance
 
 
-# Cap on the collected right side for the Arrow pairwise kernel:
-# 150k rows x 64 dims x 8 B ≈ 77 MB — the same order of magnitude as the
-# broadcast-hash relation the expression path ships to every executor.
-# r13 (VERDICT_r12 "what's wrong" #2): the cap is BYTE-sized, not
-# rows-only — 150k rows is ~77 MB at dim=64 but ~1.2 GB at dim=1024, so
-# the row cap is derived from the byte budget and the probed dimension
-# before anything is collected.
+# Caps on the Arrow pairwise kernel's collected right side. The budget is
+# in BYTES (~77 MB, the order of the broadcast-hash relation the
+# expression path ships): the row cap comes from it and the probed
+# dimension, so a dim-1024 side falls back instead of pulling ~1.2 GB.
 _PAIRWISE_KERNEL_CAP = 150_000
 _PAIRWISE_KERNEL_BYTES = 150_000 * 64 * 8  # ~77 MB budget
 
@@ -91,7 +89,11 @@ def _pairwise_threshold_arrow(a, b, threshold, self_join):
     """
     from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
-    from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
+    from hnsw_vector_db_spark.session import (
+        bounded_collect,
+        ensure_package_shipped,
+        install_zip_guard,
+    )
 
     id_a_type = a.schema["id_a"].dataType
     id_b_type = b.schema["id_b"].dataType
@@ -107,27 +109,24 @@ def _pairwise_threshold_arrow(a, b, threshold, self_join):
             StructField("sim", DoubleType()),
         ]
     )
-    # probe one row for the dimension, then derive the ROW cap from the
-    # BYTE budget before collecting anything sizeable — a dim-1024 right
-    # side must fall back instead of pulling ~1.2 GB onto the driver
+    # probe one row for the dimension: the row cap comes from the byte budget
     probe = b.limit(1).collect()
     if not probe:
         return spark.createDataFrame([], schema)
-    if probe[0]["_vb"] is None or len(probe[0]["_vb"]) == 0:
+    dim = len(probe[0]["_vb"] or ())
+    if dim == 0:
         return None
-    dim = len(probe[0]["_vb"])
     row_cap = min(_PAIRWISE_KERNEL_CAP, _PAIRWISE_KERNEL_BYTES // (dim * 8))
-    # bounded collect (documented cap): the expression path would collect
-    # this side into a broadcast-hash relation anyway
-    rows = b.limit(row_cap + 1).collect()
-    if len(rows) > row_cap:
+    rows = bounded_collect(b, row_cap, None)
+    if rows is None or any(r["id_b"] is None for r in rows):
         return None
-    if any(r["id_b"] is None or r["_vb"] is None for r in rows):
+    try:
+        mat_b = vector_matrix([r["_vb"] for r in rows], "_vb")
+    except ValueError:  # a null or ragged vector: the expression path decides
         return None
-    if any(len(r["_vb"]) != dim for r in rows):
+    if mat_b.shape[1] != dim:
         return None
     ids_b = np.asarray([r["id_b"] for r in rows], dtype=np.int64)
-    mat_b = np.asarray([r["_vb"] for r in rows], dtype=np.float64)
     bc = spark.sparkContext.broadcast((ids_b, mat_b))
     thr = float(threshold)
     # fold vs matmul worst-case gap for unit-scale rows; recomputed per
@@ -166,6 +165,10 @@ def _pairwise_threshold_arrow(a, b, threshold, self_join):
             if len(pdf) == 0:
                 continue
             va = pdf["_va"]
+            # the left side is filtered row by row, not decoded with
+            # vector_matrix: the expression path it mirrors drops a
+            # null or wrong-length left vector (its sim is null) and
+            # keeps every other row, so a bad row must not fail the batch
             vec_ok = _np.fromiter(
                 (v is not None and len(v) == Bt.shape[0] for v in va),
                 dtype=bool,
@@ -349,12 +352,7 @@ def lsh_ann_topk(
     scored = joined.withColumn(
         "dist", F.round(distance(F.col(vector_col), F.col(query_vec_col), metric), 6)
     )
-    w = Window.partitionBy(query_id_col).orderBy(F.col("dist").asc(), F.col(id_col).asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "dist", "rank")
-    )
+    return top_k_per_query(scored, k, query_id_col, id_col)
 
 
 def assign_to_centroids(
@@ -450,7 +448,7 @@ def assign_to_centroids_blas(
     )
     srows.sort(key=lambda r: r[0])
     sids = np.array([r[0] for r in srows], dtype=np.int64)
-    C = np.array([list(r[1]) for r in srows], dtype=np.float64)
+    C = vector_matrix([r[1] for r in srows], seed_vec_col)
     Cm = unit_rows(C) if metric == "cosine" else C
     bc = spark.sparkContext.broadcast((sids, Cm))
 
@@ -460,7 +458,7 @@ def assign_to_centroids_blas(
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = np.vstack(pdf[vector_col].to_numpy()).astype(np.float64)
+            X = vector_matrix(pdf[vector_col], vector_col)
             ids = pdf[id_col].to_numpy()
             D = block_distances(X, b_C, metric)
             j = D.argmin(axis=1)  # first min == lowest seed id on ties
@@ -535,7 +533,7 @@ def ivf_fit_seeded(
         .select(vector_col)
         .collect()
     )
-    centroids = np.array([list(r[0]) for r in seed_rows], dtype=np.float64)
+    centroids = vector_matrix([r[0] for r in seed_rows], vector_col)
     seeds_df = vectors.sparkSession.createDataFrame(
         [(i, [float(x) for x in centroids[i]]) for i in range(len(centroids))],
         "seed_id int, seed_vec array<double>",
@@ -776,7 +774,7 @@ def pq_fit_codebooks(
     sample = (
         vectors.orderBy(id_col).limit(sample_rows).select(vector_col).collect()
     )
-    X = np.array([list(r[0]) for r in sample], dtype=np.float64)
+    X = vector_matrix([r[0] for r in sample], vector_col)
     rows = []
     for m in range(n_subspaces):
         sub = np.ascontiguousarray(X[:, m * width : (m + 1) * width])
@@ -911,9 +909,9 @@ def pq_adc_topk(
     width = dim // n_subspaces
     q = np.asarray(list(query), dtype=np.float64)
     srows = seeds.select(seed_id_col, seed_vec_col).collect()
+    S = vector_matrix([r[seed_vec_col] for r in srows], seed_vec_col)
     lut = []  # (m, code, partial_dist^2)
-    for r in srows:
-        sv = np.asarray(list(r[seed_vec_col]), dtype=np.float64)
+    for r, sv in zip(srows, S):
         for m in range(n_subspaces):
             dd = q[m * width : (m + 1) * width] - sv[m * width : (m + 1) * width]
             lut.append((m, int(r[seed_id_col]), float((dd * dd).sum())))

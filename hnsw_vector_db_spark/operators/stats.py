@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_vector_db_spark.functions.distance import norm
+from hnsw_vector_db_spark.functions.distance import norm, vector_matrix
 
 
 def index_stats(
@@ -62,7 +62,7 @@ def label_centroids(
     @pandas_udf("array<double>", PandasUDFType.GROUPED_AGG)
     def _centroid(v):
         install_zip_guard()
-        X = np.vstack(v.to_numpy()).astype(np.float64)
+        X = vector_matrix(v, vector_col)
         return [float(x) for x in np.round(X.mean(axis=0), round_dp)]
 
     # Spark disallows mixing pandas and JVM aggregates in one agg

@@ -28,10 +28,13 @@ session without ever importing this package. Every engine UDF therefore
 calls ``install_zip_guard()`` first; its first task in a worker pays the
 old cost once and every later task in that worker skips it.
 
-Row-capped collects (``bounded_collect``). Every operator that pulls a
-table to the driver (a BPE histogram, a query batch, a seed table, a
-snapshot export) goes through one helper that caps the rows and raises an
-error naming the caller's cap parameter.
+Row-capped collects (``bounded_collect``). Every pull of a small side to
+the driver (a BPE histogram, a query batch, a seed table, the pairwise
+kernel's right side, a snapshot export) is one ``limit(cap + 1)``
+collect, which runs no job on a local relation. Past the cap it raises
+an error naming the caller's cap parameter, or returns None so the
+caller takes its distributed path. Only a kNN query batch past its
+``chunk_size`` streams through a local iterator (one job per partition).
 """
 
 from __future__ import annotations

@@ -55,6 +55,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from hnsw_vector_db_spark.functions.distance import vector_matrix
 from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
 from hnsw_vector_db_spark.sources.vectorflow_snapshot import (
     DEFAULT_MAX_ELEMENTS,
@@ -211,7 +212,7 @@ class VectorFlowWriter(DataSourceWriter):
                 if self.has_level and row["level"] is not None
                 else 0
             )
-            vecs.append(np.asarray(row["vector"], dtype=np.float64))
+            vecs.append(row["vector"])
             if self.has_meta and row["metadata"]:
                 meta[str(int(row["id"]))] = row["metadata"]
         fname = os.path.join(self.staging, f"part-{pid:05d}.npz")
@@ -219,7 +220,7 @@ class VectorFlowWriter(DataSourceWriter):
             fname,
             ids=np.asarray(ids, dtype=np.int64),
             levels=np.asarray(levels, dtype=np.int64),
-            X=np.vstack(vecs) if vecs else np.zeros((0, 0)),
+            X=vector_matrix(vecs, "vector"),
             meta=json.dumps(meta),
         )
         return _SpillMessage(file=fname, count=len(ids))

@@ -374,6 +374,7 @@ def write_snapshot(
     reference loads such a snapshot but its search can only ever reach the
     entry point, so we warn loudly — pass the ``hnsw_edges`` output (or
     ``read_snapshot_edges`` of another snapshot) for a searchable export."""
+    from hnsw_vector_db_spark.functions.distance import vector_matrix
     from hnsw_vector_db_spark.session import bounded_collect
 
     cap = int((params or {}).get("max_elements", DEFAULT_MAX_ELEMENTS))
@@ -397,7 +398,7 @@ def write_snapshot(
         path,
         [int(r["id"]) for r in data],
         [int(r["level"]) if has_level and r["level"] is not None else 0 for r in data],
-        np.array([r["vector"] for r in data], dtype=np.float64),
+        vector_matrix([r["vector"] for r in data], "vector"),
         {
             str(int(r["id"])): json.loads(r["metadata"])
             for r in data

@@ -7,6 +7,7 @@ index IndexErrors at the entry-point lookup)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from hnsw_vector_db_spark.operators import dedup, text_analysis
 from hnsw_vector_db_spark.operators.knn import knn_batch, knn_batch_twophase, knn_point
@@ -121,3 +122,80 @@ def test_hnsw_delete_empty_tombstones_is_identity(spark, sf_dir):
     out = hnsw_delete(index, tomb)
     assert out.exceptAll(index).count() == 0
     assert index.exceptAll(out).count() == 0
+
+
+# ---------------------------------------------------------------------------
+# bad vectors: a null vector or mixed dimensions fail loudly, naming the
+# column, on every path that decodes a vector column into a matrix
+
+_GOOD = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0], [0.0, 0.0, 1.0], [1.0, 1.0, 0.0]]
+_BAD = {"null": None, "mixed": [1.0, 2.0]}
+
+
+def _with_bad(spark, bad, schema, extra=()):
+    rows = [(i, *extra, v) for i, v in enumerate(_GOOD)]
+    return spark.createDataFrame(rows + [(len(rows), *extra, bad)], schema)
+
+
+def _good_corpus(spark):
+    return spark.createDataFrame(
+        [(i, v) for i, v in enumerate(_GOOD)], "vec_id long, embedding array<double>"
+    )
+
+
+def _twophase(spark, bad, **kw):
+    queries = _with_bad(spark, bad, "query_id long, query_vec array<double>")
+    knn_batch_twophase(queries, _good_corpus(spark), k=2, **kw).collect()
+
+
+def _hnsw_search(spark, bad):
+    import numpy as np
+
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build, hnsw_search
+
+    assigned = _good_corpus(spark).withColumn("cell", F.lit(0))
+    index = hnsw_build(assigned, metric="euclidean")
+    queries = _with_bad(spark, bad, "query_id long, query_vec array<double>")
+    hnsw_search(
+        index, queries, np.array([[0.5, 0.5, 0.5]]), k=2, nprobe=1, metric="euclidean"
+    ).collect()
+
+
+def _assign_blas(spark, bad):
+    from hnsw_vector_db_spark.operators.similarity import assign_to_centroids_blas
+
+    seeds = _with_bad(spark, bad, "seed_id long, seed_vec array<double>")
+    assign_to_centroids_blas(_good_corpus(spark), seeds).collect()
+
+
+def _hnsw_build(spark, bad):
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build
+
+    assigned = _with_bad(
+        spark, bad, "vec_id long, cell int, embedding array<double>", extra=(0,)
+    )
+    hnsw_build(assigned, metric="euclidean").collect()
+
+
+_BAD_VECTOR_CASES = {
+    # name: (run, the column the error must name)
+    "knn_twophase": (_twophase, "query_vec"),
+    "knn_twophase_chunked": (lambda s, b: _twophase(s, b, chunk_size=1), "query_vec"),
+    "hnsw_search": (_hnsw_search, "query_vec"),
+    "assign_to_centroids_blas": (_assign_blas, "seed_vec"),
+    "hnsw_build": (_hnsw_build, "embedding"),
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_BAD))
+@pytest.mark.parametrize("case", sorted(_BAD_VECTOR_CASES))
+def test_bad_vector_raises_value_error_naming_the_column(spark, case, kind):
+    """Driver-side decodes raise ``ValueError`` directly; a decode inside
+    a UDF (``hnsw_build``'s per-cell build) fails its task with the same
+    ``ValueError``, which Spark re-raises with that text."""
+    run, col = _BAD_VECTOR_CASES[case]
+    with pytest.raises(Exception) as info:
+        run(spark, _BAD[kind])
+    err = info.value
+    text = f"{type(err).__name__}: {err}"
+    assert f"ValueError: vector column {col!r}" in text, text[-2000:]

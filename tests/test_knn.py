@@ -3,6 +3,8 @@ physical-plan shape (the part that matters at scale)."""
 
 from __future__ import annotations
 
+import time
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -126,16 +128,27 @@ def test_knn_twophase_equals_batch(spark, emb):
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
-    for metric in ("cosine", "euclidean", "manhattan", "dot_product"):
-        a = {
-            (r["query_id"], r["rank"]): (r["vec_id"], round(r["dist"], 6))
-            for r in knn_batch(queries, emb, k=5, metric=metric).collect()
-        }
-        b = {
-            (r["query_id"], r["rank"]): (r["vec_id"], round(r["dist"], 6))
-            for r in knn_batch_twophase(queries, emb, k=5, metric=metric).collect()
-        }
-        assert a == b, f"two-phase != batch for {metric}"
+    # every corpus vector three times (ids below and above the original)
+    # and a repeated query: each query's distances come in tied triples,
+    # so ranks 4-6 tie and rank k=5 is decided by the id tiebreak alone
+    base = emb.select("vec_id", "embedding")
+    dup_emb = base.unionByName(
+        base.withColumn("vec_id", -1 - F.col("vec_id"))
+    ).unionByName(base.withColumn("vec_id", F.col("vec_id") + 1_000_000))
+    dup_queries = queries.unionByName(
+        queries.withColumn("query_id", F.col("query_id") + 100)
+    )
+    for corpus, qs in ((emb, queries), (dup_emb, dup_queries)):
+        for metric in ("cosine", "euclidean", "manhattan", "dot_product"):
+            a = {
+                (r["query_id"], r["rank"]): (r["vec_id"], round(r["dist"], 6))
+                for r in knn_batch(qs, corpus, k=5, metric=metric).collect()
+            }
+            b = {
+                (r["query_id"], r["rank"]): (r["vec_id"], round(r["dist"], 6))
+                for r in knn_batch_twophase(qs, corpus, k=5, metric=metric).collect()
+            }
+            assert a == b, f"two-phase != batch for {metric}"
     # auto picks the small path here but must produce identical results
     cos = {
         (r["query_id"], r["rank"]): r["vec_id"]
@@ -172,6 +185,74 @@ def test_knn_twophase_chunked_collect_equals_batch(spark, emb):
 
     with pytest.raises(ValueError, match="chunk_size"):
         knn_batch_twophase(queries, emb, k=4, chunk_size=0)
+
+
+def _jobs_in_group(spark, group, action):
+    """Run ``action`` under job group ``group``; return how many jobs
+    the status store recorded for that group."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc.listenerBus().waitUntilEmpty()
+
+    def count():
+        jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+            jsc.statusStore().jobsList(None)
+        )
+        return sum(1 for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group)
+
+    # the status store can trail the listener bus: read until it settles
+    n, prev = count(), -1
+    for _ in range(10):
+        if n == prev:
+            break
+        time.sleep(0.3)
+        n, prev = count(), n
+    return n
+
+
+def test_knn_twophase_pulls_a_local_query_batch_without_a_job(spark, emb):
+    """Queries under ``chunk_size`` arrive in one bounded collect, which
+    runs no job on a local relation: the call costs the map-side top-k
+    job and the rank job only, however many partitions the query frame
+    has (a per-partition iterator would add one job per partition)."""
+    from hnsw_vector_db_spark.operators.knn import knn_batch, knn_batch_twophase
+
+    import pandas as pd
+
+    rows = emb.filter(F.col("vec_id") < 40).select("vec_id", "embedding").collect()
+    key = "spark.sql.leafNodeDefaultParallelism"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "4")
+    try:
+        # built from pandas through Arrow: a LocalRelation over 4 partitions
+        queries = spark.createDataFrame(
+            pd.DataFrame(
+                {"query_id": [r["vec_id"] for r in rows],
+                 "query_vec": [list(r["embedding"]) for r in rows]}
+            ),
+            "query_id long, query_vec array<float>",
+        )
+        assert "LocalRelation" in queries._jdf.queryExecution().optimizedPlan().toString()
+        assert queries.rdd.getNumPartitions() == 4
+        out = []
+        n = _jobs_in_group(
+            spark, "knn-twophase-jobs",
+            lambda: out.extend(knn_batch_twophase(queries, emb, k=3).collect()),
+        )
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+    assert n == 2, n
+    want = knn_batch(queries, emb, k=3).collect()
+    key_of = lambda r: (r["query_id"], r["rank"], r["vec_id"])
+    assert sorted(map(key_of, out)) == sorted(map(key_of, want))
 
 
 def test_hard_negatives_excludes_same_label_and_self(spark, sf_dir):
