@@ -2145,8 +2145,9 @@ def q_orders_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Transitive closure of the cosine near-dup relation (iterative
-    min-label propagation; oracle = recursive CTE)."""
+    """Transitive closure of the cosine near-dup relation (the pairs fit
+    the driver budget, so they are closed in numpy on the driver;
+    oracle = recursive CTE)."""
     emb = _emb(spark, sf_dir)
     pairs = similarity.similarity_join(emb, threshold=SIM_THRESHOLD)
     return dedup.neardup_components(emb, pairs)
@@ -2157,11 +2158,11 @@ def q_cc_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Kiveris et al., SoCC 2014) — the O(log d)-round SCALE tier of
     neardup_components (operators/dedup.py:connected_components_twophase),
     run on the SAME cosine near-dup pairs and pinned to the SAME
-    recursive-CTE oracle: both forms must produce identical
-    (vec_id, rep_id, is_dup) labels. Min-label propagation needs
-    O(diameter) rounds and now RAISES past its cap; this form is what
-    versioned-boilerplate chains (v1 ~ v2 ~ ... ~ v50, diameter 50)
-    require at corpus scale."""
+    recursive-CTE oracle: both paths must produce identical
+    (vec_id, rep_id, is_dup) labels. neardup_components runs this form
+    for every pair list past its driver budget, so it is called
+    directly here to keep the star path under the oracle at a size the
+    budget would close on the driver."""
     emb = _emb(spark, sf_dir)
     pairs = similarity.similarity_join(emb, threshold=SIM_THRESHOLD)
     return dedup.connected_components_twophase(emb, pairs)
@@ -7971,8 +7972,9 @@ def q_pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard verify (threshold) -> connected-components closure ->
     quality-aware survivor per entity cluster. The full production ER
     shape composed from individually-oracle-green stages, each
-    scale-shaped (banded candidates — never all-pairs; min-label CC with
-    checkpointed rounds; one component-keyed window for survivorship).
+    scale-shaped (banded candidates — never all-pairs; CC closed on the
+    driver under its budget, star contraction above it; one
+    component-keyed window for survivorship).
 
     TIER 0 (r6): exact duplicates collapse to one representative BEFORE
     LSH blocking (dedup.py:exact_groups) and component labels fan back
@@ -9643,8 +9645,8 @@ SELECT node AS vec_id, min(r) AS rep_id, min(r) <> node AS is_dup
 FROM reach GROUP BY node
 """.strip()
 
-    # the large-star/small-star scale tier must agree with min-label
-    # propagation label-for-label — same transitive-closure oracle
+    # the large-star/small-star scale tier must agree with the driver
+    # closure label-for-label — same transitive-closure oracle
     sql["cc_scale"] = sql["neardup_components"]
     # the incremental fold must equal the FULL recompute over all pairs
     sql["cc_incremental"] = sql["neardup_components"]

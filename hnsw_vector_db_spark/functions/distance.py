@@ -275,7 +275,13 @@ def block_distances(X: np.ndarray, Y: np.ndarray, metric: str) -> np.ndarray:
     the broadcast side once on the driver). Euclidean is
     ``||x||^2 - 2x.y + ||y||^2``, which can differ from the Column
     expressions' sum of squares in the last ulp. Any other metric name
-    is euclidean."""
+    is euclidean. Blocks of different widths raise ``ValueError`` giving
+    both widths."""
+    if X.shape[1] != Y.shape[1]:
+        raise ValueError(
+            f"vector width mismatch: rows of width {X.shape[1]} against "
+            f"broadcast vectors of width {Y.shape[1]}"
+        )
     if metric == "cosine":
         return 1.0 - unit_rows(X) @ Y.T
     if metric == "dot_product":

@@ -485,100 +485,80 @@ def embedding_neardup(
     )
 
 
+# A pair list up to this many bytes of int64 (id, id) pairs is closed on
+# the driver; a larger one goes to star contraction.
+_CC_DRIVER_BYTES = 16 << 20
+
+
 def neardup_components(
     nodes: DataFrame,
     pairs: DataFrame,
     id_col: str = "vec_id",
-    max_iters: int = 25,
 ) -> DataFrame:
     """Connected-components closure over near-dup pairs: every node gets
     the MIN id of its whole component as ``rep_id`` — the transitive
     completion of :func:`embedding_neardup`'s one-pass star rule (chains
-    a~b, b~c collapse to one cluster).
+    a~b, b~c collapse to one cluster). This is the one front door for
+    connected components.
 
-    Iterative min-label propagation: each round, a node's label becomes
-    the min of its own and its neighbors' labels; converges in
-    O(component diameter) rounds, checked by an aggregate count of
-    changed labels. Each round is one equi-join on the edge key + one
-    groupBy — both shuffle-partitioned by id, the standard Spark CC shape.
-    Near-dup components are usually shallow (a few hops), which is why
-    this form is the default; for DEEP components — versioned-boilerplate
-    chains where doc v1 ~ v2 ~ ... ~ v50 — use
+    A graph whose pairs fit ``_CC_DRIVER_BYTES`` (as int64 pairs) is
+    pulled with one :func:`~hnsw_vector_db_spark.session.bounded_collect`
+    and closed in numpy: each pass lowers every endpoint's label to the
+    min across its edges, then jumps pointers, until no label changes.
+    Labels only fall, so the loop ends with no iteration cap, at any
+    component depth. The non-trivial (id, rep) pairs come back as one
+    Arrow-built relation, broadcast-joined to ``nodes``. A larger graph,
+    or one whose ids are not integers, runs
     :func:`connected_components_twophase` (large-star/small-star,
-    O(log d) rounds). ``localCheckpoint`` truncates the growing lineage
-    so round N doesn't re-execute rounds 1..N-1.
+    O(log d) rounds) with the same output.
 
-    Raises ``RuntimeError`` if ``max_iters`` rounds exhaust WITHOUT the
-    convergence witness stabilizing (r6 judge: the earlier form silently
-    returned partial labels — wrong reps with no error — on components
-    deeper than the iteration cap).
+    Pairs with a null endpoint and self-loops are dropped. A pair
+    endpoint missing from ``nodes`` still connects its neighbours, but
+    gets no output row.
 
     ``nodes``: (id_col, ...); ``pairs``: (doc_a/id pairs as produced by
     the near-dup operators, any two-column prefix). Output:
-    (id_col, rep_id, is_dup).
+    (id_col, rep_id, is_dup), ``rep_id`` of the node id's type.
     """
-    a, b = pairs.columns[0], pairs.columns[1]
-    # symmetric edge list, shuffle-keyed on src
-    edges = (
-        pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
-        .unionAll(pairs.select(F.col(b).alias("src"), F.col(a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    from pyspark.sql import Observation
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import IntegralType
 
-    # r12 (guide §1.2 — fewer driver-paced jobs): the convergence witness
-    # rides the checkpoint job as an Observation metric, so each round is
-    # ONE job (join+agg+checkpoint) instead of two (checkpoint, then a
-    # separate sum over it). Same witness, same values.
-    obs0 = Observation()
-    labels = (
-        nodes.select(F.col(id_col).alias("node"), F.col(id_col).alias("rep"))
-        .observe(obs0, F.sum("rep").alias("s"))
-        .localCheckpoint()
-    )
-    prev_sum = obs0.get["s"]
-    converged = False
-    for _ in range(max_iters):
-        neigh_min = (
-            edges.join(labels, edges.dst == labels.node)
-            .groupBy("src")
-            .agg(F.min("rep").alias("nrep"))
-        )
-        obs = Observation()
-        new_labels = (
-            labels.join(neigh_min, labels.node == neigh_min.src, "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("rep"), F.coalesce(F.col("nrep"), F.col("rep"))
-                ).alias("rep"),
-            )
-            # labels only ever decrease, so sum(rep) is a strictly-
-            # decreasing convergence witness — collected by the
-            # checkpoint job itself, no second aggregate job
-            .observe(obs, F.sum("rep").alias("s"))
-            .localCheckpoint()
-        )
-        cur_sum = obs.get["s"]
-        labels = new_labels
-        if cur_sum == prev_sum:
-            converged = True
+    from hnsw_vector_db_spark.session import bounded_collect
+
+    a, b = pairs.columns[0], pairs.columns[1]
+    if not all(isinstance(pairs.schema[c].dataType, IntegralType) for c in (a, b)):
+        return connected_components_twophase(nodes, pairs, id_col)
+    # a null endpoint makes the comparison null, so its pair goes too
+    edges = pairs.select(a, b).where(F.col(a) != F.col(b))
+    rows = bounded_collect(edges, _CC_DRIVER_BYTES // 16, None)
+    if rows is None:
+        return connected_components_twophase(nodes, pairs, id_col)
+    ends = np.array(rows, dtype=np.int64).reshape(-1, 2)
+    ids, inv = np.unique(ends, return_inverse=True)
+    src, dst = inv.reshape(ends.shape).T
+    # labels are indices into the sorted ids, so the min label is the min id
+    label = np.arange(ids.size)
+    while True:
+        prev = label.copy()
+        np.minimum.at(label, src, label[dst])
+        np.minimum.at(label, dst, label[src])
+        label = label[label]
+        if np.array_equal(label, prev):
             break
-        prev_sum = cur_sum
-    if not converged:
-        raise RuntimeError(
-            f"neardup_components: min-label propagation did not converge "
-            f"in max_iters={max_iters} rounds — the component diameter "
-            "exceeds the cap (versioned-boilerplate chains are the real-"
-            "corpus case). Use connected_components_twophase (O(log d) "
-            "rounds) or raise max_iters; returning partial labels would "
-            "be silently wrong."
+    dup = label != np.arange(ids.size)
+    reps = nodes.sparkSession.createDataFrame(
+        pa.table({id_col: ids[dup], "rep": ids[label[dup]]})
+    )
+    id_type = nodes.schema[id_col].dataType
+    return (
+        nodes.select(F.col(id_col))
+        .join(F.broadcast(reps), id_col, "left")
+        .select(
+            F.col(id_col),
+            F.coalesce(F.col("rep").cast(id_type), F.col(id_col)).alias("rep_id"),
+            F.col("rep").isNotNull().alias("is_dup"),
         )
-    return labels.select(
-        F.col("node").alias(id_col),
-        F.col("rep").alias("rep_id"),
-        (F.col("rep") != F.col("node")).alias("is_dup"),
     )
 
 
@@ -587,21 +567,20 @@ def connected_components_incremental(
     new_nodes: DataFrame,
     new_pairs: DataFrame,
     id_col: str = "vec_id",
-    max_iters: int = 40,
 ) -> DataFrame:
     """INCREMENTAL connected components: fold a batch of new nodes and
     new near-dup pairs into a PERSISTED labeling without re-reading the
-    historical pair set — the index-maintenance tier of the dedup CC
-    family (batch: :func:`neardup_components`; scale:
-    :func:`connected_components_twophase`; this: the per-batch form an
-    always-on ingest pipeline runs).
+    historical pair set — the per-batch form an always-on ingest
+    pipeline runs, through the same front door as a batch
+    (:func:`neardup_components`).
 
     Correctness rests on a graph identity: a component's star edges
     (node -> rep) are a connectivity-preserving summary of ALL its
     historical edges, so CC( star(G1) ∪ E2 ) == CC( G1 ∪ E2 ). The
     history therefore enters as O(nodes) rep edges — independent of how
-    many raw pairs ever existed — and the union runs through the
-    O(log d) large-star/small-star tier. Representatives stay the
+    many raw pairs ever existed — and the union is closed by
+    :func:`neardup_components` (on the driver when it fits, else by
+    large-star/small-star). Representatives stay the
     component MIN, so labels are stable (a component's rep changes only
     if the batch merges it with a lower-id component), and the output
     is provably identical to a full recompute over the union — which is
@@ -627,9 +606,7 @@ def connected_components_incremental(
         .unionByName(new_pairs.select(F.col(b).alias(id_col)))
         .distinct()
     )
-    return connected_components_twophase(
-        nodes, pairs, id_col=id_col, max_iters=max_iters
-    )
+    return neardup_components(nodes, pairs, id_col=id_col)
 
 
 def _cc_large_star(edges: DataFrame) -> DataFrame:
@@ -678,10 +655,10 @@ def connected_components_twophase(
     """Connected components via alternating large-star / small-star
     steps (Kiveris, Lattanzi, Mirrokni, Rastogi & Vassilvitskii,
     "Connected Components in MapReduce and Beyond", ACM SoCC 2014 —
-    public): the SCALE tier of :func:`neardup_components`, converging in
-    O(log d) rounds where min-label propagation needs O(d) — d being the
-    component diameter. Versioned-boilerplate chains (doc v1 ~ v2 ~ ...
-    ~ v50) are exactly the real-corpus case where d is large.
+    public): the scale tier of :func:`neardup_components`, which hands
+    it every pair list past the driver budget. It converges in O(log d)
+    rounds, d being the component diameter, so versioned-boilerplate
+    chains (doc v1 ~ v2 ~ ... ~ v50) stay cheap.
 
     Each round is two star steps; each step is one keyed aggregation
     (per-node neighborhood min) plus one equi-join re-attach — both
@@ -693,11 +670,12 @@ def connected_components_twophase(
     minimum. Fixpoint detection is exact (count + exceptAll), not a
     checksum — a hash collision here would return wrong labels, and the
     extra exceptAll per round is two scans of a shrinking edge set.
-    ``localCheckpoint`` truncates lineage per round (the
-    neardup_components lesson).
+    ``localCheckpoint`` truncates lineage per round, so round N does
+    not re-execute rounds 1..N-1.
 
     Output contract is IDENTICAL to :func:`neardup_components`:
-    (id_col, rep_id, is_dup) with rep_id = component min — the driver
+    (id_col, rep_id, is_dup) with rep_id = component min, of the node
+    id's type — the driver
     entry pins equality through the same recursive-CTE oracle.
 
     Raises ``RuntimeError`` if ``max_iters`` rounds pass without the
@@ -755,7 +733,9 @@ def connected_components_twophase(
         .join(reps.withColumnRenamed("u", id_col), id_col, "left")
         .select(
             F.col(id_col),
-            F.coalesce(F.col("rep"), F.col(id_col)).alias("rep_id"),
+            F.coalesce(
+                F.col("rep").cast(nodes.schema[id_col].dataType), F.col(id_col)
+            ).alias("rep_id"),
             F.coalesce(F.col("rep") != F.col(id_col), F.lit(False)).alias(
                 "is_dup"
             ),
@@ -860,9 +840,10 @@ def keep_best(
     score_col: str = "quality",
 ) -> DataFrame:
     """Near-dup collapse with quality-aware survivor selection: per
-    connected component (a :func:`neardup_components` output), keep the
-    single highest-scoring member (score desc, id asc tiebreak) — the
-    step every production dedup pipeline runs after clustering, because
+    connected component (a :func:`neardup_components` output, whichever
+    path closed it), keep the single highest-scoring member (score desc,
+    id asc tiebreak) — the step every production dedup pipeline runs
+    after clustering, because
     "keep the lowest id" (the bare rep_id) throws away the best-written
     duplicate. Deterministic given deterministic scores ->
     oracle-checked.

@@ -1038,7 +1038,13 @@ def hnsw_search(
         import pyarrow as pa
 
         Q = vector_matrix([r[query_vec_col] for r in qin], query_vec_col)
-        cells = _route_cells(Q, np.asarray(centroids, dtype=np.float64), nprobe, metric)
+        C = np.asarray(centroids, dtype=np.float64)
+        if Q.shape[1] != C.shape[1]:
+            raise ValueError(
+                f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
+                f"the centroids width {C.shape[1]}"
+            )
+        cells = _route_cells(Q, C, nprobe, metric)
         nb, dim = cells.shape[1], Q.shape[1]
         probed = np.unique(cells).tolist()
         qids = np.array([r[query_id_col] for r in qin], dtype=np.int64)
@@ -1075,6 +1081,11 @@ def hnsw_search(
         local = _index_local(st)
         ids = np.asarray(st["ids"], dtype=np.int64)
         Q = vector_matrix(q_pdf[query_vec_col], query_vec_col)
+        if Q.shape[1] != int(st["dim"]):
+            raise ValueError(
+                f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
+                f"the index of cell {int(st['cell'])} width {int(st['dim'])}"
+            )
         nodes, dists = local.search_batch(Q, k_fetch, ef_eff)
         hit = nodes >= 0  # each row's hits come first, nearest first
         return pd.DataFrame(

@@ -272,7 +272,7 @@ def test_search_after_each_write_matches_brute_force(spark, tmp_path, metric):
     check("compact")
 
 
-def test_warm_search_is_one_job_without_shuffle(spark, tmp_path):
+def test_warm_search_is_one_job_without_shuffle(spark, tmp_path, jobs_in_group):
     from hnsw_vector_db_spark.plans.explain import physical_plan
 
     vt = VectorTable.create(spark, str(tmp_path / "t"), metric="cosine")
@@ -281,21 +281,14 @@ def test_warm_search_is_one_job_without_shuffle(spark, tmp_path):
     )
     vt.insert([1.0, 2.0, 3.0], external_id=7)
     vt.search([1.0, 0.0, 0.0], k=3).collect()  # the first read of the version
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    sc.setJobGroup("warm-search", "warm search")
-    try:
-        hits = vt.search([0.0, 1.0, 0.0], k=3)
-        hits.collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jsc.listenerBus().waitUntilEmpty()
-    jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
-        jsc.statusStore().jobsList(None)
-    )
-    groups = [j.jobGroup() for j in jobs]
-    assert sum(1 for g in groups if g.isDefined() and g.get() == "warm-search") == 1
-    plan = physical_plan(hits)
+    hits = []
+
+    def warm_search():
+        hits.append(vt.search([0.0, 1.0, 0.0], k=3))
+        hits[0].collect()
+
+    assert jobs_in_group("warm-search", warm_search) == 1
+    plan = physical_plan(hits[0])
     assert "Exchange" not in plan and "Window" not in plan, plan
 
 

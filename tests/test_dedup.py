@@ -232,9 +232,10 @@ def test_twophase_cc_deep_chain_converges(spark):
     assert all(got[i] == (0, i != 0) for i in range(n))
 
 
-def test_neardup_components_raises_on_unconverged_deep_chain(spark):
-    """min-label propagation on a chain deeper than max_iters must RAISE
-    (r6 judge: the silent partial-labels exit returned wrong reps)."""
+def test_twophase_cc_raises_on_unconverged_deep_chain(spark):
+    """Star contraction that reaches ``max_iters`` without a fixed point
+    must RAISE rather than return partial labels; the front door closes
+    the same chain, which has no iteration cap."""
     import pytest as _pytest
 
     n = 60
@@ -242,11 +243,84 @@ def test_neardup_components_raises_on_unconverged_deep_chain(spark):
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
     )
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        dedup.neardup_components(nodes, pairs, max_iters=10)
-    # and the scale tier handles the same input fine
-    got = dedup.connected_components_twophase(nodes, pairs).collect()
+    with _pytest.raises(RuntimeError, match="no fixed point"):
+        dedup.connected_components_twophase(nodes, pairs, max_iters=1)
+    got = dedup.neardup_components(nodes, pairs).collect()
     assert all(r["rep_id"] == 0 for r in got)
+
+
+def _cc_graph(spark, case):
+    """(nodes, pairs) for one named CC input."""
+    import random
+
+    long_ids = "vec_id long", "doc_a long, doc_b long"
+    if case == "random":
+        rng = random.Random(7)
+        edges = [(rng.randrange(400), rng.randrange(400)) for _ in range(300)]
+        ids, schema = range(400), long_ids
+    elif case == "chain":
+        edges = [(i, i + 1) for i in range(299)]
+        ids, schema = range(300), long_ids
+    elif case == "self_loop":
+        edges = [(1, 1), (2, 3), (3, 3), (5, 4)]
+        ids, schema = range(1, 7), long_ids
+    elif case == "null_endpoint":
+        edges = [(1, None), (None, 2), (2, 3), (None, None), (6, 4)]
+        ids, schema = range(1, 7), long_ids
+    elif case == "int_ids":
+        edges = [(9, 3), (3, 5), (7, 8), (1, 1)]
+        ids, schema = range(1, 11), ("vec_id int", "doc_a int, doc_b int")
+    else:  # int_nodes_long_pairs
+        edges = [(9, 3), (3, 5), (7, 8), (1, 1)]
+        ids, schema = range(1, 11), ("vec_id int", "doc_a long, doc_b long")
+    return (
+        spark.createDataFrame([(i,) for i in ids], schema[0]),
+        spark.createDataFrame(edges, schema[1]),
+    )
+
+
+@pytest.mark.parametrize(
+    "case", ["random", "chain", "self_loop", "null_endpoint", "int_ids", "int_nodes_long_pairs"]
+)
+def test_cc_star_path_equals_driver_path(spark, monkeypatch, case):
+    """A zero driver budget sends every graph to star contraction; its
+    labels and output schema must equal the driver closure's."""
+    nodes, pairs = _cc_graph(spark, case)
+    driver = dedup.neardup_components(nodes, pairs)
+    monkeypatch.setattr(dedup, "_CC_DRIVER_BYTES", 0)
+    star = dedup.neardup_components(nodes, pairs)
+    assert star.schema == driver.schema
+    assert sorted(map(tuple, star.collect())) == sorted(map(tuple, driver.collect()))
+    assert driver.schema["rep_id"].dataType == nodes.schema["vec_id"].dataType
+
+
+def test_neardup_components_string_ids(spark):
+    """Ids that are not integers skip the driver closure (its budget is
+    counted in int64 pairs) and are closed by star contraction."""
+    nodes = spark.createDataFrame([(c,) for c in "abcde"], "vec_id string")
+    pairs = spark.createDataFrame([("c", "b"), ("d", "c")], "doc_a string, doc_b string")
+    got = {r["vec_id"]: r["rep_id"] for r in dedup.neardup_components(nodes, pairs).collect()}
+    assert got == {"a": "a", "b": "b", "c": "b", "d": "b", "e": "e"}
+
+
+def test_neardup_components_is_one_job(spark, jobs_in_group):
+    """A pair list under the driver budget is closed with one bounded
+    collect of the checkpointed pairs: the call runs one job, whatever
+    the component depth (min-label propagation ran one per round). The
+    frame has one partition, as a checkpointed ``minhash_lsh_near_dup``
+    output of this size has after AQE coalescing."""
+    import random
+
+    rng = random.Random(5)
+    edges = [(rng.randrange(300), rng.randrange(300)) for _ in range(300)]
+    edges += [(i, i + 1) for i in range(30)]  # a 30-hop chain
+    nodes = spark.createDataFrame([(i,) for i in range(300)], "vec_id long")
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long").coalesce(1).localCheckpoint()
+    out = []
+    n = jobs_in_group("cc-driver-jobs", lambda: out.append(dedup.neardup_components(nodes, pairs)))
+    assert n == 1, n
+    star = dedup.connected_components_twophase(nodes, pairs)
+    assert sorted(map(tuple, out[0].collect())) == sorted(map(tuple, star.collect()))
 
 
 def test_cc_incremental_equals_full_recompute(spark):

@@ -6,6 +6,8 @@ index IndexErrors at the entry-point lookup)."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -199,3 +201,61 @@ def test_bad_vector_raises_value_error_naming_the_column(spark, case, kind):
     err = info.value
     text = f"{type(err).__name__}: {err}"
     assert f"ValueError: vector column {col!r}" in text, text[-2000:]
+
+
+# ---------------------------------------------------------------------------
+# width mismatch: vectors of one width met against a broadcast or stored
+# side of another fail with a ValueError giving both widths
+
+
+def _narrow_queries(spark):
+    return spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0])], "query_id long, query_vec array<double>"
+    )
+
+
+def _width_hnsw_search(spark, centroids):
+    import numpy as np
+
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build, hnsw_search
+
+    index = hnsw_build(_good_corpus(spark).withColumn("cell", F.lit(0)), metric="euclidean")
+    hnsw_search(
+        index, _narrow_queries(spark), np.array(centroids), k=2, nprobe=1, metric="euclidean"
+    ).collect()
+
+
+def _width_assign_blas(spark):
+    from hnsw_vector_db_spark.operators.similarity import assign_to_centroids_blas
+
+    seeds = spark.createDataFrame(
+        [(0, [1.0, 0.0])], "seed_id long, seed_vec array<double>"
+    )
+    assign_to_centroids_blas(_good_corpus(spark), seeds).collect()
+
+
+_WIDTH_CASES = {
+    # name: (run, the two widths the error must give, in order)
+    "knn_twophase": (
+        lambda s: knn_batch_twophase(_narrow_queries(s), _good_corpus(s), k=2).collect(),
+        (3, 2),
+    ),
+    "assign_to_centroids_blas": (_width_assign_blas, (3, 2)),
+    "hnsw_search_routing": (lambda s: _width_hnsw_search(s, [[0.5, 0.5, 0.5]]), (2, 3)),
+    "hnsw_search_cell": (lambda s: _width_hnsw_search(s, [[0.5, 0.5]]), (2, 3)),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_WIDTH_CASES))
+def test_width_mismatch_raises_value_error_giving_both_widths(spark, case):
+    """The executor-side kernels (``topk_block``, ``assign_blocks``,
+    ``hnsw_search``'s per-cell search) fail their task with the
+    ``ValueError``, which Spark re-raises with that text; ``hnsw_search``
+    checks the centroids on the driver before routing."""
+    run, (w1, w2) = _WIDTH_CASES[case]
+    with pytest.raises(Exception) as info:
+        run(spark)
+    err = info.value
+    text = f"{type(err).__name__}: {err}"
+    assert "ValueError: " in text, text[-2000:]
+    assert re.search(rf"width {w1}\b.*width {w2}\b", text), text[-2000:]

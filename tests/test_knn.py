@@ -3,8 +3,6 @@ physical-plan shape (the part that matters at scale)."""
 
 from __future__ import annotations
 
-import time
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -187,35 +185,7 @@ def test_knn_twophase_chunked_collect_equals_batch(spark, emb):
         knn_batch_twophase(queries, emb, k=4, chunk_size=0)
 
 
-def _jobs_in_group(spark, group, action):
-    """Run ``action`` under job group ``group``; return how many jobs
-    the status store recorded for that group."""
-    sc = spark.sparkContext
-    jsc = sc._jsc.sc()
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jsc.listenerBus().waitUntilEmpty()
-
-    def count():
-        jobs = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
-            jsc.statusStore().jobsList(None)
-        )
-        return sum(1 for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group)
-
-    # the status store can trail the listener bus: read until it settles
-    n, prev = count(), -1
-    for _ in range(10):
-        if n == prev:
-            break
-        time.sleep(0.3)
-        n, prev = count(), n
-    return n
-
-
-def test_knn_twophase_pulls_a_local_query_batch_without_a_job(spark, emb):
+def test_knn_twophase_pulls_a_local_query_batch_without_a_job(spark, emb, jobs_in_group):
     """Queries under ``chunk_size`` arrive in one bounded collect, which
     runs no job on a local relation: the call costs the map-side top-k
     job and the rank job only, however many partitions the query frame
@@ -240,8 +210,8 @@ def test_knn_twophase_pulls_a_local_query_batch_without_a_job(spark, emb):
         assert "LocalRelation" in queries._jdf.queryExecution().optimizedPlan().toString()
         assert queries.rdd.getNumPartitions() == 4
         out = []
-        n = _jobs_in_group(
-            spark, "knn-twophase-jobs",
+        n = jobs_in_group(
+            "knn-twophase-jobs",
             lambda: out.extend(knn_batch_twophase(queries, emb, k=3).collect()),
         )
     finally:
