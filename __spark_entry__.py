@@ -2919,8 +2919,10 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_hnsw_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN search over the PERSISTED per-cell HNSW index — pure search
-    (graph reconstruction from stored state + beam search), no per-call
-    rebuild; the build ran once inside ``_hnsw_artifacts``.
+    (each probed cell answered by its cheaper kernel: an exact scan of
+    the stored vectors, or graph reconstruction from stored state + beam
+    search), no per-call rebuild; the build ran once inside
+    ``_hnsw_artifacts``.
     SELF-VERIFYING: each returned distance is recomputed relationally
     from the (query_id, vec_id) pair — ``dist_correct`` proves the
     graph-traversal path reports the true metric, even though the
@@ -3467,9 +3469,10 @@ def q_hnsw_recall_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nprobe=3/4, probed-fraction bound 0.65): that row proves the
     partition-pruned fast path; this row proves the index meets the
     self-imposed approximate-path standard (recall@10 >= 0.9,
-    BASELINE.md). Rows-only (graph traversal isn't SQL) but fully
-    seed-deterministic; ``meets_target`` is the always-true-when-correct
-    boolean the driver row pins."""
+    BASELINE.md). ``kernel="graph"``: the row measures the beam at
+    ef=128, which the exact cell scan would bypass. Rows-only (graph
+    traversal isn't SQL) but fully seed-deterministic; ``meets_target``
+    is the always-true-when-correct boolean the driver row pins."""
     from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search
 
     emb = _emb(spark, sf_dir)
@@ -3478,9 +3481,9 @@ def q_hnsw_recall_target(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = knn_batch(queries, emb, k=10, metric="cosine").select("query_id", "vec_id")
     index, centroids = _hnsw_artifacts(spark, sf_dir, n_cells=4)
-    approx = hnsw_search(index, queries, centroids, k=10, ef=128, nprobe=4).select(
-        "query_id", "vec_id"
-    )
+    approx = hnsw_search(
+        index, queries, centroids, k=10, ef=128, nprobe=4, kernel="graph"
+    ).select("query_id", "vec_id")
     hits = approx.join(exact, ["query_id", "vec_id"], "left_semi").agg(
         F.count(F.lit(1)).alias("n_hits")
     )
@@ -3655,7 +3658,9 @@ def q_hnsw_ef_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the non-decreasing flag (deterministic for the fixed seeds).
     ``ok`` is the always-true-when-correct boolean the driver row pins:
     per-row monotonicity AND the sweep's widest beam reaching the
-    nprobe=3/4 probed-fraction recall bound (>= 0.65)."""
+    nprobe=3/4 probed-fraction recall bound (>= 0.65). Every beam runs
+    on the graph (``kernel="graph"``), so ef keeps its meaning at every
+    cell size."""
     from functools import reduce
 
     from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search
@@ -3668,9 +3673,9 @@ def q_hnsw_ef_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     index, centroids = _hnsw_artifacts(spark, sf_dir, n_cells=4)
     parts = []
     for ef in (8, 32, 96):
-        approx = hnsw_search(index, queries, centroids, k=10, ef=ef, nprobe=3).select(
-            "query_id", "vec_id"
-        )
+        approx = hnsw_search(
+            index, queries, centroids, k=10, ef=ef, nprobe=3, kernel="graph"
+        ).select("query_id", "vec_id")
         parts.append(
             approx.join(exact, ["query_id", "vec_id"], "left_semi")
             .agg(F.count(F.lit(1)).alias("n_hits"))
@@ -3709,7 +3714,9 @@ def q_ann_tune_ef(spark: SparkSession, sf_dir: str) -> DataFrame:
     hnsw_ef_sweep is), but deterministic at fixed seeds, with the
     driver-pinned ``ok``: recall non-decreasing in ef (wider beams
     explore supersets), the widest beam meeting the
-    hnsw_recall_target >= 0.9 bar, and EXACTLY ONE chosen point."""
+    hnsw_recall_target >= 0.9 bar, and EXACTLY ONE chosen point. Every
+    beam runs on the graph (``kernel="graph"``), so ef keeps its
+    meaning at every cell size."""
     from functools import reduce
 
     from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search
@@ -3725,7 +3732,7 @@ def q_ann_tune_ef(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = []
     for ef in (8, 32, 96, 128):
         approx = hnsw_search(
-            index, queries, centroids, k=10, ef=ef, nprobe=4
+            index, queries, centroids, k=10, ef=ef, nprobe=4, kernel="graph"
         ).select("query_id", "vec_id")
         parts.append(
             approx.join(exact, ["query_id", "vec_id"], "left_semi")

@@ -436,7 +436,12 @@ class VectorTable:
         actual search path (`core/hnsw/graph.py:175-189`), with its ef
         knob (`server.py:34`) plus nprobe, and optional filtered search
         (``where`` over the table, applied via the allowed-set
-        semi-join). Requires :meth:`build_index`; raises if the index
+        semi-join). The approximation is in the routing only: each of
+        the ``nprobe`` probed cells small enough for
+        :func:`~.operators.hnsw_partition.hnsw_search`'s exact scan
+        (``n <= 64 * max(ef, k)`` nodes, every cell at typical sizes)
+        returns its true top-k, and only a larger cell walks its graph
+        with ``ef``. Requires :meth:`build_index`; raises if the index
         predates the latest write (stale index = silent wrong results,
         which the reference happily serves — we refuse)."""
         from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_search

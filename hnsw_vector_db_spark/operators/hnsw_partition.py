@@ -19,7 +19,7 @@ distances are evaluated as vectorized numpy batches over a neighbor
 frontier (not per-node scalar calls) and vectors live in one contiguous
 matrix.
 
-Two search kernels share one beam-search rule. :meth:`LocalHNSW.search`
+Two graph kernels share one beam-search rule. :meth:`LocalHNSW.search`
 runs one query with Python heaps and a ``set`` of visited nodes; inserts
 use it, and it is the reference the serving kernel is tested against.
 :meth:`LocalHNSW.search_batch` serves every query routed to a cell in
@@ -29,11 +29,17 @@ query, and each iteration expands every live query's nearest unexpanded
 beam member at once. The queries go through in chunks whose visited
 masks stay under ``_VISITED_CHUNK_BYTES``. A query whose distances come
 within rounding error of a tie is answered by ``search`` instead, so
-both kernels return the same nodes in the same order. So is every query
-of a call whose beam covers a whole cell of ``_WIDE_BEAM_MIN_N`` or more
-nodes (``max(ef, k) >= n``, as in exhaustive checks): there each
-lock-step iteration would sort all n beam members, and the heap loop is
-faster.
+both kernels return the same nodes in the same order.
+
+:func:`hnsw_search` picks each probed cell's kernel by cost
+(:func:`_cell_topk`). A cell of ``n <= _EXACT_SCAN_PER_BEAM * max(ef,
+k)`` nodes is answered by :func:`_scan_topk`, an exact block scan of the
+stored vectors: one distance block per chunk of queries and a per-row
+top-k by ``(dist, id)``, with no graph to rebuild. At the sizes where
+the scan wins (the constant's comment has the measured table) the beam
+visits most of the cell anyway, and every lock-step iteration sorts its
+whole beam. Larger cells keep ``search_batch``; ``kernel="graph"``
+forces it everywhere.
 
 Connectivity guarantee (the reference's documented stranded-edge defect,
 `core/hnsw/graph.py:158-168` re-prune and `:191-207` delete, does NOT
@@ -59,19 +65,33 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hnsw_vector_db_spark.functions.distance import unit_rows, vector_matrix
+from hnsw_vector_db_spark.functions.distance import (
+    block_distances,
+    unit_rows,
+    vector_matrix,
+)
 from hnsw_vector_db_spark.operators.knn import top_k_per_query
 
-# Byte bound on the (B, n) visited masks of one search_batch chunk: a
-# cell of n nodes serves max(1, _VISITED_CHUNK_BYTES // n) queries at a
-# time.
+# Byte bound on a serving kernel's largest per-chunk temporary:
+# search_batch's (B, n) boolean visited masks and the exact scan's (B, n)
+# float64 distances (manhattan: its (B, n, dim) difference block).
 _VISITED_CHUNK_BYTES = 16 * 1024 * 1024
-# Smallest cell whose whole-cell beams (max(ef, k) >= n) search_batch
-# hands to the per-query heap loop. Lock-step iterations sort the whole
-# beam, so their cost grows with n^2; on a 4-core x86 host at dim 64 the
-# two kernels break even near n = 110 (n = 32: lock step 2x faster;
-# n = 376: heap loop 3x faster).
-_WIDE_BEAM_MIN_N = 128
+# hnsw_search answers a cell of n nodes by an exact scan when
+# n <= _EXACT_SCAN_PER_BEAM * max(ef, k), and by the lock-step beam above.
+# Per-query time of search_batch / the scan in microseconds, one thread
+# on a shared 4-core x86 host, dim 64, cosine, k 10, 256 random-normal
+# queries per cell of random-normal vectors (m 8, ef_construction 32):
+#   n       ef 10       ef 32       ef 128
+#   256     91 / 12     263 / 17    1112 / 11
+#   512     146 / 20    259 / 34    1276 / 24
+#   1024    120 / 50    237 / 47    1186 / 48
+#   2048    126 / 123   359 / 137   2045 / 112
+#   4096    142 / 197   379 / 243   2028 / 190
+#   8192    187 / 435   473 / 425   2093 / 405
+# The beam breaks even near n = 200 * ef at ef 10 and n = 256 * ef at
+# ef 32, and loses on every row at ef 128 (n <= 64 * ef), so 64 stays at
+# or below every break-even the table shows.
+_EXACT_SCAN_PER_BEAM = 64
 
 
 def _pad_layers(n: int, n_layers: int, la, sa, da) -> list[np.ndarray]:
@@ -433,9 +453,7 @@ class LocalHNSW:
         holds ``search(Q[b], k, ef)`` in order, padded with -1 / inf when
         the beam found fewer than ``k`` nodes. Node ids are always equal
         to ``search``'s; distances agree to rounding error (summation
-        order differs from the one-query BLAS call). A beam as wide as a
-        cell of at least ``_WIDE_BEAM_MIN_N`` nodes is answered by
-        ``search`` row by row.
+        order differs from the one-query BLAS call).
         """
         Q = np.asarray(Q, dtype=np.float64)
         n = 0 if self.X is None else len(self.X)
@@ -450,10 +468,6 @@ class LocalHNSW:
             dists[b, : len(res)] = [dist for _, dist in res]
 
         if not n or not len(Q):
-            return nodes, dists
-        if max(ef, k) >= n >= _WIDE_BEAM_MIN_N:
-            for b in range(len(Q)):
-                by_search(b)
             return nodes, dists
         Qs = Q
         if self.metric == "cosine":  # row by row, exactly as search() does
@@ -599,6 +613,68 @@ def _index_local(row) -> LocalHNSW:
         row["levels"], row["vec_bytes"], row["e_layer"], row["e_src"], row["e_dst"],
         row.get("e_prot"),  # None for legacy pre-e_prot artifacts
     )
+
+
+def _scan_topk(
+    Q: np.ndarray, X: np.ndarray, ids: np.ndarray, k: int, metric: str
+) -> tuple[np.ndarray, np.ndarray]:
+    """Exact top-``min(k, n)`` of every row of ``Q`` over a cell's stored
+    vectors ``X`` (unit rows for cosine, as :meth:`LocalHNSW.build` keeps
+    them), ordered by ``(dist, ids[node])`` so ties go to the lower id.
+
+    Returns ``(nodes, dists)`` like :meth:`LocalHNSW.search_batch`, with
+    no padding. The queries go through in chunks whose largest
+    temporary stays under ``_VISITED_CHUNK_BYTES``. Each chunk takes the
+    k-th smallest distance per row by ``np.partition``, keeps what lies
+    below it plus the lowest-id rows at it, and sorts only those.
+    """
+    n = len(X)
+    kk = min(k, n)
+    nodes = np.empty((len(Q), kk), dtype=np.int64)
+    dists = np.empty((len(Q), kk))
+    if not kk:
+        return nodes, dists
+    by_id = np.argsort(ids, kind="stable")
+    X = X[by_id]  # a position is now an id rank
+    row_bytes = 8 * n * (X.shape[1] if metric == "manhattan" else 1)
+    step = max(1, _VISITED_CHUNK_BYTES // row_bytes)
+    for s in range(0, len(Q), step):
+        D = block_distances(Q[s:s + step], X, metric)
+        D[np.isnan(D)] = np.inf  # a NaN vector ranks last instead of breaking the cut
+        if kk < n:
+            kth = np.partition(D, kk - 1, axis=1)[:, kk - 1:kk]
+            below, at = D < kth, D == kth
+            room = kk - below.sum(axis=1, keepdims=True)
+            cols = np.nonzero(below | (at & (np.cumsum(at, axis=1) <= room)))[1]
+            cols = cols.reshape(len(D), kk)
+        else:
+            cols = np.broadcast_to(np.arange(n), D.shape)
+        d = np.take_along_axis(D, cols, axis=1)
+        order = np.argsort(d, axis=1, kind="stable")
+        nodes[s:s + step] = by_id[np.take_along_axis(cols, order, axis=1)]
+        dists[s:s + step] = np.take_along_axis(d, order, axis=1)
+    return nodes, dists
+
+
+def _scan_max_n(k: int, ef: int, kernel: str) -> int:
+    """The largest cell :func:`hnsw_search` answers by an exact scan:
+    ``_EXACT_SCAN_PER_BEAM * max(ef, k)`` under ``kernel="auto"``, and
+    -1 (none; every cell walks its graph) under ``kernel="graph"``."""
+    return _EXACT_SCAN_PER_BEAM * max(ef, k) if kernel == "auto" else -1
+
+
+def _cell_topk(
+    row, Q: np.ndarray, k: int, ef: int, scan_max_n: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """``(nodes, dists)`` of every row of ``Q`` in the cell of one index
+    row (:func:`_index_row`): an exact :func:`_scan_topk` of the stored
+    vectors when the cell has at most ``scan_max_n`` nodes, otherwise
+    :meth:`LocalHNSW.search_batch` over the stored graph."""
+    n = int(row["n"])
+    if n <= scan_max_n:
+        X = np.frombuffer(row["vec_bytes"], dtype=np.float64).reshape(n, int(row["dim"]))
+        return _scan_topk(Q, X, np.asarray(row["ids"], dtype=np.int64), k, row["metric"])
+    return _index_local(row).search_batch(Q, k, ef)
 
 
 def hnsw_build(
@@ -962,46 +1038,52 @@ def hnsw_search(
     max_collect_queries: int = 100_000,
     allowed: DataFrame | None = None,
     over_fetch: int = 4,
+    kernel: str = "auto",
 ) -> DataFrame:
     """Search a MATERIALIZED per-cell index (:func:`hnsw_build` output —
     persisted, cached, or read back from parquet) without rebuilding
-    anything: each probed cell reconstructs its graph from the stored
-    state (O(edges) array slicing, no distance evaluations) and runs the
-    beam search. The reference builds once and searches many
+    anything. The reference builds once and searches many
     (`core/hnsw/graph.py:127-189`); this is that lifecycle on Spark.
 
-    Output (query_id, vec_id, dist, rank). Each cell answers all of its
-    routed queries in one :meth:`LocalHNSW.search_batch` call (the same
-    results as one :meth:`LocalHNSW.search` per query); per-cell
-    candidate output is nprobe*k rows per query, so the final rank window
-    is tiny.
+    Output (query_id, vec_id, dist, rank). Each probed cell answers all
+    of its routed queries at once. Under ``kernel="auto"`` a cell of
+    ``n <= _EXACT_SCAN_PER_BEAM * max(ef, k)`` nodes is answered by an
+    exact block scan of its stored vectors, so within it the answer is
+    the true top-k, ties to the lower id; a larger cell reconstructs its
+    graph from the stored state (O(edges) array slicing, no distance
+    evaluations) and runs :meth:`LocalHNSW.search_batch` (the same
+    results as one :meth:`LocalHNSW.search` per query).
+    ``kernel="graph"`` runs the beam on every cell, for callers that
+    measure the graph at a given ``ef``. Per-cell candidate output is
+    nprobe*k rows per query, so the final rank window is tiny. ``k`` is
+    checked against the REST bound (:func:`~.table.validate_k`);
+    ``nprobe < 1``, ``ef < 1`` or another ``kernel`` raise
+    ``ValueError`` naming the parameter.
 
-    Partitioning: both cogroup inputs are hash-repartitioned on ``cell``
-    to ``max(1, min(probed cells, defaultParallelism))`` partitions. The
-    cogroup's clustering is then already met, so no further exchange is
-    planned, and AQE does not coalesce a repartition with an explicit
-    count: the CPU-bound per-cell searches run on every core even though
-    their shuffle is small (left to AQE, a 2 MB shuffle became 2 tasks
-    on 4 cores).
-
-    Probed-cell pushdown: the query batch is collected ONCE (bounded by
+    Routing: the query batch is collected ONCE (bounded by
     ``max_collect_queries`` — exceeding it fails fast with guidance
-    rather than silently turning a cogroup into a driver OOM) and routed
+    rather than silently collecting an unbounded batch) and routed
     DRIVER-SIDE against the local centroid matrix (:func:`_route_cells`
-    — zero extra Spark jobs). The routed (query, cell) relation is built
-    from numpy arrays as one Arrow table (query vectors as
-    ``array<float>``), not from pickled Python rows. The union of probed cells — at most n_queries *
-    nprobe ids — is pushed as an ``isin`` filter on the index BEFORE the
-    cogroup, so the index scan touches only the probed cells' rows, and
-    the cogroup consumes the SAME literal routing the filter was derived
-    from (re-evaluating the queries lineage in a second job could route
-    differently and silently drop a probed cell the filter excluded).
-    With the index stored ``partitionBy("cell")`` that filter becomes
-    real partition pruning (asserted in tests/test_hnsw_index.py): a
-    100k-cell index serves a 5-query search by reading ~nprobe*5
-    partitions, not the index. For query batches beyond the cap, chunk
-    the batch caller-side (the twophase-kNN pattern) or raise the cap
-    explicitly — an unbounded silent collect is never the default.
+    — zero extra Spark jobs). The query ids, the query vectors rounded
+    to float32 and the routing ship as one ``SparkContext.broadcast``
+    that lives as long as the lazy plan; each index row picks its own
+    queries from it. The union of probed cells — at most n_queries *
+    nprobe ids — is pushed as an ``isin`` filter on the index, so the
+    scan touches only the probed cells' rows, and the cells answer the
+    SAME literal routing the filter was derived from. With the index
+    stored ``partitionBy("cell")`` that filter becomes real partition
+    pruning (asserted in tests/test_hnsw_index.py): a 100k-cell index
+    serves a 5-query search by reading ~nprobe*5 partitions, not the
+    index. For query batches beyond the cap, chunk the batch
+    caller-side (the twophase-kNN pattern) or raise the cap explicitly.
+
+    Partitioning: the probed index rows are hash-repartitioned on
+    ``cell`` to ``max(1, min(probed cells, defaultParallelism))``
+    partitions and answered by one ``mapInPandas``; only the index rows
+    shuffle. AQE does not coalesce a repartition with an explicit
+    count, so the CPU-bound graph-kernel cells run on every core even
+    though their shuffle is small (left to AQE, a 2 MB shuffle became 2
+    tasks on 4 cores).
 
     Filtered ANN: ``allowed`` (a DataFrame of admissible ``id_col``
     values — compute it with any metadata predicate, e.g.
@@ -1010,20 +1092,27 @@ def hnsw_search(
     predicate-aware beam would have to walk through inadmissible nodes
     anyway to keep the graph connected — instead each cell over-fetches
     ``k * over_fetch`` candidates (ef inflated to match) and the
-    admissibility semi-join prunes AFTER traversal, before the final
-    rank window; recall then depends on over_fetch vs the predicate's
-    selectivity (checked against exact filtered kNN by the
+    admissibility semi-join prunes AFTER the cell kernels, before the
+    final rank window; recall then depends on over_fetch vs the
+    predicate's selectivity (checked against exact filtered kNN by the
     hnsw_filtered_recall driver entry). The reference can only echo
     metadata back per hit (`api/rest/server.py:174`), never filter on
     it."""
     import pandas as pd
 
+    from hnsw_vector_db_spark.operators.table import validate_k
     from hnsw_vector_db_spark.session import (
         bounded_collect,
         ensure_package_shipped,
         install_zip_guard,
     )
 
+    validate_k(k)
+    for name, value in (("nprobe", nprobe), ("ef", ef)):
+        if value < 1:
+            raise ValueError(f"hnsw_search: {name} must be >= 1, got {value!r}")
+    if kernel not in ("auto", "graph"):
+        raise ValueError(f"hnsw_search: kernel must be 'auto' or 'graph', got {kernel!r}")
     spark = queries.sparkSession
     ensure_package_shipped(spark)
     qin = bounded_collect(
@@ -1033,76 +1122,57 @@ def hnsw_search(
         f"got > {max_collect_queries} queries. Chunk the batch and union "
         f"results, or pass max_collect_queries= explicitly.",
     )
-    schema = f"{query_id_col} long, {query_vec_col} array<float>, cell int"
-    if qin:
-        import pyarrow as pa
-
-        Q = vector_matrix([r[query_vec_col] for r in qin], query_vec_col)
-        C = np.asarray(centroids, dtype=np.float64)
-        if Q.shape[1] != C.shape[1]:
-            raise ValueError(
-                f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
-                f"the centroids width {C.shape[1]}"
-            )
-        cells = _route_cells(Q, C, nprobe, metric)
-        nb, dim = cells.shape[1], Q.shape[1]
-        probed = np.unique(cells).tolist()
-        qids = np.array([r[query_id_col] for r in qin], dtype=np.int64)
-        flat = np.repeat(Q.astype(np.float32), nb, axis=0).reshape(-1)
-        qcells = spark.createDataFrame(
-            pa.table(
-                {
-                    query_id_col: np.repeat(qids, nb),
-                    query_vec_col: pa.ListArray.from_arrays(
-                        np.arange(0, flat.size + 1, dim, dtype=np.int32), flat
-                    ),
-                    "cell": cells.reshape(-1).astype(np.int32),
-                }
-            ),
-            schema,
+    Q = vector_matrix([r[query_vec_col] for r in qin], query_vec_col)
+    C = np.asarray(centroids, dtype=np.float64)
+    if qin and Q.shape[1] != C.shape[1]:
+        raise ValueError(
+            f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
+            f"the centroids width {C.shape[1]}"
         )
-    else:
-        probed = []
-        qcells = spark.createDataFrame([], schema)
+    cells = _route_cells(Q, C, nprobe, metric) if qin else np.zeros((0, 1), dtype=np.int64)
+    probed = np.unique(cells).tolist()
+    qids = np.array([r[query_id_col] for r in qin], dtype=np.int64)
+    bc = spark.sparkContext.broadcast((qids, Q.astype(np.float32), cells))
     parts = max(1, min(len(probed), spark.sparkContext.defaultParallelism))
-    index = index.filter(F.col("cell").isin(probed)).repartition(parts, "cell")
-    qcells = qcells.repartition(parts, "cell")
 
     # filtered search over-fetches per cell so enough admissible
     # candidates survive the post-traversal semi-join
     k_fetch = k * max(over_fetch, 1) if allowed is not None else k
     ef_eff = max(ef, k_fetch)
+    scan_max_n = _scan_max_n(k_fetch, ef_eff, kernel)
 
-    def per_cell(idx_pdf: pd.DataFrame, q_pdf: pd.DataFrame) -> pd.DataFrame:
+    def per_cell(batches):
         install_zip_guard()
-        if idx_pdf.empty or q_pdf.empty:
-            return pd.DataFrame(columns=[query_id_col, id_col, "dist"])
-        st = idx_pdf.iloc[0]
-        local = _index_local(st)
-        ids = np.asarray(st["ids"], dtype=np.int64)
-        Q = vector_matrix(q_pdf[query_vec_col], query_vec_col)
-        if Q.shape[1] != int(st["dim"]):
-            raise ValueError(
-                f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
-                f"the index of cell {int(st['cell'])} width {int(st['dim'])}"
-            )
-        nodes, dists = local.search_batch(Q, k_fetch, ef_eff)
-        hit = nodes >= 0  # each row's hits come first, nearest first
-        return pd.DataFrame(
-            {
-                query_id_col: np.repeat(
-                    q_pdf[query_id_col].to_numpy(dtype=np.int64), hit.sum(axis=1)
-                ),
-                id_col: ids[nodes[hit]],
-                "dist": dists[hit],
-            }
-        )
+        b_qids, b_Q, b_cells = bc.value
+        # the routed (query, cell) pairs grouped by cell, once per task
+        by_cell = np.argsort(b_cells, axis=None, kind="stable")
+        sorted_cells = b_cells.reshape(-1)[by_cell]
+        for pdf in batches:
+            for _, st in pdf.iterrows():
+                cell = int(st["cell"])
+                lo, hi = np.searchsorted(sorted_cells, [cell, cell + 1])
+                rows = by_cell[lo:hi] // b_cells.shape[1]
+                Q = b_Q[rows].astype(np.float64)
+                if Q.shape[1] != int(st["dim"]):
+                    raise ValueError(
+                        f"hnsw_search: {query_vec_col!r} vectors have width {Q.shape[1]}, "
+                        f"the index of cell {cell} width {int(st['dim'])}"
+                    )
+                nodes, dists = _cell_topk(st, Q, k_fetch, ef_eff, scan_max_n)
+                hit = nodes >= 0  # each row's hits come first, nearest first
+                ids = np.asarray(st["ids"], dtype=np.int64)
+                yield pd.DataFrame(
+                    {
+                        query_id_col: np.repeat(b_qids[rows], hit.sum(axis=1)),
+                        id_col: ids[nodes[hit]],
+                        "dist": dists[hit],
+                    }
+                )
 
-    out_schema = f"{query_id_col} long, {id_col} long, dist double"
     candidates = (
-        index.groupBy("cell")
-        .cogroup(qcells.groupBy("cell"))
-        .applyInPandas(lambda ik, qk: per_cell(ik, qk), out_schema)
+        index.filter(F.col("cell").isin(probed))
+        .repartition(parts, "cell")
+        .mapInPandas(per_cell, f"{query_id_col} long, {id_col} long, dist double")
     )
     if allowed is not None:
         candidates = candidates.join(

@@ -259,3 +259,27 @@ def test_width_mismatch_raises_value_error_giving_both_widths(spark, case):
     text = f"{type(err).__name__}: {err}"
     assert "ValueError: " in text, text[-2000:]
     assert re.search(rf"width {w1}\b.*width {w2}\b", text), text[-2000:]
+
+
+# ---------------------------------------------------------------------------
+# hnsw_search's parameters are checked on the driver, before any job
+
+
+_BAD_SEARCH_ARGS = {"k": 0, "nprobe": 0, "ef": 0, "kernel": "beam"}
+
+
+@pytest.mark.parametrize("name", sorted(_BAD_SEARCH_ARGS))
+def test_hnsw_search_rejects_bad_parameters(spark, name):
+    """k outside the REST bound, nprobe < 1, ef < 1 and an unknown kernel
+    raise ``ValueError`` naming the parameter, not an empty frame."""
+    import numpy as np
+
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build, hnsw_search
+
+    index = hnsw_build(_good_corpus(spark).withColumn("cell", F.lit(0)), metric="euclidean")
+    queries = spark.createDataFrame(
+        [(0, [0.0, 1.0, 1.0])], "query_id long, query_vec array<double>"
+    )
+    args = {"k": 2, "nprobe": 1, name: _BAD_SEARCH_ARGS[name]}
+    with pytest.raises(ValueError, match=rf"\b{name}\b"):
+        hnsw_search(index, queries, np.array([[0.5, 0.5, 0.5]]), metric="euclidean", **args)

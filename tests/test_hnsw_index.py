@@ -17,7 +17,11 @@ from pyspark.sql import functions as F
 from hnsw_vector_db_spark.operators import hnsw_partition
 from hnsw_vector_db_spark.operators.hnsw_partition import (
     LocalHNSW,
+    _cell_topk,
+    _index_local,
+    _index_row,
     _route_cells,
+    _scan_topk,
     hnsw_build,
     hnsw_edges,
     hnsw_search,
@@ -114,31 +118,67 @@ def test_search_batch_equals_search(metric, monkeypatch):
     _assert_batch_equals_search(idx, Q, 10, 24)
 
 
-def test_search_batch_sends_whole_cell_beams_to_search(monkeypatch):
-    """A beam covering a cell of at least _WIDE_BEAM_MIN_N nodes is
-    answered by search() for every query and never enters the lock-step
-    kernel; a smaller cell, or a narrower beam, stays in lock step."""
-    rng = np.random.RandomState(5)
-    n = hnsw_partition._WIDE_BEAM_MIN_N
-    big = LocalHNSW(m=6, ef_construction=32)
-    big.build(rng.randn(n, 8))
-    small = LocalHNSW(m=6, ef_construction=32)
-    small.build(rng.randn(n - 1, 8))
-    Q = rng.randn(12, 8)
+def _cell_row(n: int):
+    """An index row (``_index_row``) of one built cell of ``n`` 8-d nodes."""
+    local = LocalHNSW(m=6, ef_construction=32)
+    local.build(np.random.RandomState(5).randn(n, 8))
+    return _index_row(0, np.arange(n) * 3, local)
 
-    for idx, k, ef, wide in [
-        (big, 3, n, True), (big, n, 8, True), (big, 3, n - 1, False),
-        (small, 3, 4 * n, False),
+
+@pytest.mark.parametrize("k, ef", [(3, 2), (2, 3)])
+def test_kernel_rule_scans_up_to_the_bound(monkeypatch, k, ef):
+    """Under kernel="auto" a cell of n == _EXACT_SCAN_PER_BEAM * max(ef, k)
+    nodes is answered by the exact scan, without rebuilding its graph,
+    and a cell one node larger by the lock-step beam; under
+    kernel="graph" even a one-node cell walks its graph."""
+    bound = hnsw_partition._EXACT_SCAN_PER_BEAM * max(ef, k)
+    assert hnsw_partition._scan_max_n(k, ef, "auto") == bound
+    Q = np.random.RandomState(9).randn(6, 8)
+    for n, kernel, scans in [
+        (bound, "auto", True), (bound + 1, "auto", False), (1, "graph", False),
     ]:
-        searched, stepped = [], []
-        search, beam = idx.search, idx._beam_batch
-        monkeypatch.setattr(idx, "search", lambda *a: searched.append(a) or search(*a))
-        monkeypatch.setattr(idx, "_beam_batch", lambda *a: stepped.append(a) or beam(*a))
-        nodes, _ = idx.search_batch(Q, k, ef)
+        row = _cell_row(n)
+        ran = []
+        scan, beam = hnsw_partition._scan_topk, LocalHNSW.search_batch
+        monkeypatch.setattr(
+            hnsw_partition, "_scan_topk", lambda *a: ran.append("scan") or scan(*a)
+        )
+        monkeypatch.setattr(
+            LocalHNSW, "search_batch", lambda *a: ran.append("beam") or beam(*a)
+        )
+        monkeypatch.setattr(
+            hnsw_partition, "_index_local", lambda *a: ran.append("graph") or _index_local(*a)
+        )
+        nodes, _ = _cell_topk(row, Q, k, max(ef, k), hnsw_partition._scan_max_n(k, ef, kernel))
         monkeypatch.undo()
-        assert (len(searched), bool(stepped)) == ((len(Q), False) if wide else (0, True))
-        for b, q in enumerate(Q):
-            assert nodes[b][nodes[b] >= 0].tolist() == [i for i, _ in idx.search(q, k, ef)]
+        assert ran == (["scan"] if scans else ["graph", "beam"]), (n, kernel)
+        assert nodes.shape == (len(Q), min(k, n))
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot_product", "euclidean", "manhattan"])
+def test_scan_topk_is_exact_with_ties_to_the_lower_id(metric, monkeypatch):
+    """The exact scan returns each query's top min(k, n) by (dist, id):
+    on duplicates that straddle rank k, with ids out of node order, with
+    k > n, and across query chunks of a small byte bound. A NaN query
+    gets k hits at distance inf instead of failing the cut."""
+    rng = np.random.RandomState(4)
+    base = rng.randn(40, 6)
+    X = np.vstack([base, np.repeat(base[:2], 3, axis=0)])  # 3 more copies each
+    ids = rng.permutation(1000)[: len(X)]
+    Q = np.vstack([base[:2], rng.randn(10, 6)])
+    local = LocalHNSW(metric=metric)
+    local.build(X)  # the stored form: unit rows for cosine
+    for k in (2, 3, 4, 5, 60):
+        for step_bytes in (None, 8 * len(X) * 3):  # 3 queries a chunk; manhattan 1
+            if step_bytes:
+                monkeypatch.setattr(hnsw_partition, "_VISITED_CHUNK_BYTES", step_bytes)
+            nodes, dists = _scan_topk(Q, local.X, ids, k, metric)
+            monkeypatch.undo()
+            want_n, want_d = _brute_topk(Q, X, ids, k, metric)
+            assert [ids[r].tolist() for r in nodes] == want_n
+            np.testing.assert_allclose(dists, want_d, rtol=0, atol=1e-9)
+    nodes, dists = _scan_topk(np.full((1, 6), np.nan), local.X, ids, 3, metric)
+    assert nodes.shape == (1, 3) and np.isinf(dists).all()  # NaN ranks last
 
 
 def test_hnsw_build_warns_nothing_about_type_hints(fitted):
@@ -153,10 +193,12 @@ def test_hnsw_build_warns_nothing_about_type_hints(fitted):
     assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
 
 
-def test_hnsw_search_cogroup_runs_at_full_parallelism(spark, fitted, tmp_path):
-    """Both cogroup inputs are repartitioned on cell to min(probed cells,
-    defaultParallelism) partitions, and AQE leaves that count alone: no
-    coalesced shuffle read anywhere below the cogroup."""
+def test_hnsw_search_cells_run_at_full_parallelism(spark, fitted, tmp_path):
+    """The probed index rows are repartitioned on cell to min(probed
+    cells, defaultParallelism) partitions, and AQE leaves that count
+    alone: below the per-cell MapInPandas there is exactly one exchange,
+    that repartition, no coalesced shuffle read, and nothing of the
+    query side (it is a broadcast variable, not a relation)."""
     import re
 
     from hnsw_vector_db_spark.plans.explain import physical_plan
@@ -172,10 +214,152 @@ def test_hnsw_search_cogroup_runs_at_full_parallelism(spark, fitted, tmp_path):
     out = hnsw_search(index, queries, centroids, k=5, nprobe=2)
     assert len(out.collect()) == 5 * len(Q)
     final = physical_plan(out).split("== Initial Plan ==")[0]
-    cogroup = final[final.index("FlatMapCoGroupsInPandas"):]
-    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", cogroup)
-    assert exchanges == [("cell", str(parts), "REPARTITION_BY_NUM")] * 2, cogroup
-    assert "AQEShuffleRead" not in cogroup, cogroup
+    cells = final[final.index("MapInPandas"):]
+    exchanges = re.findall(r"Exchange hashpartitioning\((\w+)#\d+, (\d+)\), (\w+)", cells)
+    assert exchanges == [("cell", str(parts), "REPARTITION_BY_NUM")], cells
+    assert cells.count("Exchange") == 1, cells
+    assert "AQEShuffleRead" not in cells, cells
+    assert "query_vec" not in cells and "LocalTableScan" not in cells, cells
+
+
+def _brute_dist(Q: np.ndarray, X: np.ndarray, metric: str) -> np.ndarray:
+    """(len(Q), len(X)) distances, one (query, vector) pair at a time."""
+    def one(q, x):
+        if metric == "cosine":
+            nq, nx = np.linalg.norm(q), np.linalg.norm(x)
+            return 1.0 - float(np.dot(q / nq, x / nx))
+        if metric == "dot_product":
+            return -float(np.dot(q, x))
+        if metric == "manhattan":
+            return float(np.abs(q - x).sum())
+        return float(np.sqrt(((q - x) ** 2).sum()))
+
+    return np.array([[one(q, x) for x in X] for q in Q])
+
+
+def _brute_topk(Q, X, ids, k, metric):
+    """Each query's top min(k, n) ids by (dist, id), and their distances."""
+    D = _brute_dist(Q, X, metric)
+    order = [np.lexsort((ids, d))[:k] for d in D]
+    return [ids[o].tolist() for o in order], np.array([d[o] for d, o in zip(D, order)])
+
+
+_DUP_IDS = [250, 7, 170, 40, 210, 90, 130]  # not in id order
+
+
+def _ann_cells(spark, metric):
+    """A materialized four-cell index over 8-d vectors whose values are
+    float32-exact (the engine ships queries as float32): cell 0 holds one
+    vector seven times (``_DUP_IDS``) among 60 others, cell 1 three
+    vectors, its neighbour cell 2 one, and cell 3 forty. Returns (index,
+    centroids, members by cell, queries): the repeated vector, cell 1's
+    and cell 2's members, then 20 queries near random cells."""
+    rng = np.random.RandomState(17)
+
+    def f32(a):
+        return a.astype(np.float32).astype(np.float64)
+
+    offsets = np.eye(4, 8) * 6.0
+    offsets[2] = offsets[1] + np.eye(8)[2]  # cells 1 and 2 are neighbours
+    sizes = {0: 60, 1: 3, 2: 1, 3: 40}
+    members, next_id = {}, 1000
+    for c, size in sizes.items():
+        X = f32(offsets[c] + rng.randn(size, 8))
+        members[c] = (np.arange(next_id, next_id + size), X)
+        next_id += size
+    dup = f32(2.0 * offsets[0] + rng.randn(8))  # the longest vector: nearest to itself by dot
+    ids0, X0 = members[0]
+    members[0] = (
+        np.concatenate([ids0, _DUP_IDS]),
+        np.vstack([X0, np.repeat(dup[None], len(_DUP_IDS), axis=0)]),
+    )
+    rows = [
+        (int(i), [float(v) for v in x], c)
+        for c, (ids, X) in members.items() for i, x in zip(ids, X)
+    ]
+    assigned = spark.createDataFrame(
+        rows, "vec_id long, embedding array<double>, cell int"
+    )
+    index = hnsw_build(assigned, metric=metric, m=4, ef_construction=16).localCheckpoint()
+    centroids = np.array([members[c][1].mean(axis=0) for c in sorted(members)])
+    Q = np.vstack(
+        [dup, members[1][1], members[2][1], f32(offsets[rng.randint(4, size=20)] + rng.randn(20, 8))]
+    )
+    return index, centroids, members, Q
+
+
+def _search(spark, index, centroids, Q, metric, **kw):
+    queries = spark.createDataFrame(
+        [(q, [float(v) for v in x]) for q, x in enumerate(Q)],
+        "query_id long, query_vec array<float>",
+    )
+    got = {}
+    for r in sorted(
+        hnsw_search(index, queries, centroids, metric=metric, **kw).collect(),
+        key=lambda r: (r["query_id"], r["rank"]),
+    ):
+        got.setdefault(r["query_id"], []).append((r["vec_id"], r["dist"]))
+    return got
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot_product", "euclidean", "manhattan"])
+def test_hnsw_search_equals_brute_force_over_probed_cells(spark, metric):
+    """Under kernel="auto" every cell of this index is small enough for
+    the exact scan, so hnsw_search equals a numpy brute force over
+    exactly the probed cells' members: ids by (dist, id), so the
+    duplicates straddling rank k come lowest id first, fewer than k hits
+    where the probed cells hold fewer, and with ``allowed=`` each cell's
+    top k * over_fetch filtered before the final top k."""
+    k, nprobe = 5, 2
+    index, centroids, members, Q = _ann_cells(spark, metric)
+    cells = _route_cells(Q, centroids, nprobe, metric)
+    allowed_ids = {int(i) for ids, _ in members.values() for i in ids if i % 2 == 0}
+    allowed = spark.createDataFrame([(i,) for i in sorted(allowed_ids)], "vec_id long")
+    got = _search(spark, index, centroids, Q, metric, k=k, ef=8, nprobe=nprobe)
+    got_f = _search(
+        spark, index, centroids, Q, metric, k=k, ef=8, nprobe=nprobe,
+        allowed=allowed, over_fetch=2,
+    )
+    assert [i for i, _ in got[0]] == sorted(_DUP_IDS)[:k]  # the tie, cut at k
+    assert len(got[1]) < k  # the 3-node and 1-node cells
+    for q, x in enumerate(Q):
+        ids = np.concatenate([members[c][0] for c in cells[q]])
+        X = np.vstack([members[c][1] for c in cells[q]])
+        want_ids, want_d = _brute_topk(x[None], X, ids, k, metric)
+        assert [i for i, _ in got[q]] == want_ids[0], q
+        np.testing.assert_allclose([d for _, d in got[q]], want_d[0], rtol=0, atol=1.5e-6)
+        # allowed=: each cell's top k * over_fetch, then the admissible ones
+        cand = []
+        for c in cells[q]:
+            c_ids, c_d = _brute_topk(x[None], members[c][1], members[c][0], k * 2, metric)
+            cand += [(d, i) for i, d in zip(c_ids[0], c_d[0]) if i in allowed_ids]
+        assert [i for i, _ in got_f.get(q, [])] == [i for _, i in sorted(cand)[:k]], q
+
+
+@pytest.mark.parametrize("force", ["kernel", "constant"])
+@pytest.mark.parametrize("metric", ["cosine", "euclidean"])
+def test_hnsw_search_graph_kernel_is_the_beam(spark, monkeypatch, metric, force):
+    """kernel="graph", or _EXACT_SCAN_PER_BEAM = 0 under "auto", answers
+    every cell by the beam: with one probed cell per query the hits are
+    exactly LocalHNSW.search's nodes, in order. At this narrow ef the
+    beam misses some exact neighbours that the default kernel finds."""
+    k, ef = 5, 2
+    index, centroids, members, Q = _ann_cells(spark, metric)
+    Q = Q[1:]  # no seven-way tie
+    kw = {"kernel": "graph"}
+    if force == "constant":
+        monkeypatch.setattr(hnsw_partition, "_EXACT_SCAN_PER_BEAM", 0)
+        kw = {}
+    got = _search(spark, index, centroids, Q, metric, k=k, ef=ef, nprobe=1, **kw)
+    monkeypatch.undo()
+    exact = _search(spark, index, centroids, Q, metric, k=k, ef=ef, nprobe=1)
+    rows = {r["cell"]: r for r in index.collect()}
+    cells = _route_cells(Q, centroids, 1, metric)[:, 0]
+    for q, x in enumerate(Q):
+        row = rows[int(cells[q])]
+        want = [row["ids"][n] for n, _ in _index_local(row.asDict()).search(x, k, ef)]
+        assert [i for i, _ in got[q]] == want, q
+    assert got != exact
 
 
 def test_build_once_search_many(spark, fitted, tmp_path):
