@@ -2360,7 +2360,9 @@ def _hnsw_artifacts(
     tag = hashlib.md5(
         # version tag: bump on any LocalHNSW construction change (v3 =
         # protected fan-in cap) so a cached pre-change artifact is never
-        # mistaken for the current algorithm's output
+        # mistaken for the current algorithm's output. A change that
+        # leaves every index row equal needs no bump, even when it moves
+        # cells to other tasks and so writes the index as more files.
         f"{os.path.abspath(sf_dir)}|{n_cells}|{metric}|"
         f"{'seeded' if seeded else 'kmeans'}|hnsw-v3".encode()
     ).hexdigest()[:12]

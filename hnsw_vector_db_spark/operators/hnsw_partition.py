@@ -11,6 +11,15 @@ each cell a few hundred MB that fits one executor's memory; build is
 embarrassingly parallel; a cell rebuild (after deletes, `graph.py:191-207`'s
 stranded-edge problem) touches one cell, not the corpus.
 
+Every per-cell stage (:func:`hnsw_build`'s ``applyInPandas``,
+:func:`hnsw_insert`'s cogroup, :func:`hnsw_search`'s ``mapInPandas``)
+sits behind one rule, :func:`_on_cells`: a hash repartition on ``cell``
+with an explicit partition count, at most ``defaultParallelism``. AQE
+coalesces an implicit shuffle by its bytes, and a whole corpus of small
+cells is a few MB, so left to it every cell would be built in one task;
+an explicit count it leaves alone, so the CPU-bound cells run on every
+core. A built index is one parquet file per non-empty partition.
+
 ``LocalHNSW`` is an original implementation of the published HNSW
 algorithm (Malkov & Yashunin, arXiv:1603.09320): geometric level
 assignment, greedy descent with ef=1 above the base layer, beam search at
@@ -66,6 +75,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hnsw_vector_db_spark.functions.distance import (
+    METRICS,
     block_distances,
     unit_rows,
     vector_matrix,
@@ -92,6 +102,21 @@ _VISITED_CHUNK_BYTES = 16 * 1024 * 1024
 # ef 32, and loses on every row at ef 128 (n <= 64 * ef), so 64 stays at
 # or below every break-even the table shows.
 _EXACT_SCAN_PER_BEAM = 64
+
+
+def _check_build_params(m: int, ef_construction: int, metric: str | None = None) -> None:
+    """Raise ``ValueError`` naming a graph-build parameter that cannot
+    work: ``m < 2`` (ml = 1/log(m) needs m > 1, and a 1-regular graph
+    cannot hold the small-world invariants), ``ef_construction < 1`` (an
+    insert's beam would hold no candidate to link to) or a ``metric``
+    that :data:`~..functions.distance.METRICS` does not know (the graph
+    kernels would silently fall back to euclidean)."""
+    if m < 2:
+        raise ValueError(f"m must be >= 2, got {m}")
+    if ef_construction < 1:
+        raise ValueError(f"ef_construction must be >= 1, got {ef_construction}")
+    if metric is not None and metric not in METRICS:
+        raise ValueError(f"metric must be one of {sorted(METRICS)}, got {metric!r}")
 
 
 def _pad_layers(n: int, n_layers: int, la, sa, da) -> list[np.ndarray]:
@@ -125,10 +150,7 @@ class LocalHNSW:
         metric: str = "cosine",
         seed: int = 0,
     ) -> None:
-        if m < 2:
-            # m=1 degenerates ml to 1/log(1) (div-by-zero) and a 1-regular
-            # graph cannot hold the small-world invariants.
-            raise ValueError(f"m must be >= 2, got {m}")
+        _check_build_params(m, ef_construction, metric)
         self.m = m
         self.m0 = 2 * m
         self.efc = ef_construction
@@ -140,10 +162,11 @@ class LocalHNSW:
         # adjacency: level -> {node -> list of neighbors}
         self.adj: list[dict[int, list[int]]] = []
         self.entry: int = -1
-        # layer-0 parent edges (unordered (lo, hi) pairs) exempt from
-        # trimming — the bidirectional spanning tree that guarantees
-        # strong connectivity at the base layer (module docstring).
-        self.protected0: set[tuple[int, int]] = set()
+        # layer-0 parent edges exempt from trimming — the bidirectional
+        # spanning tree that guarantees strong connectivity at the base
+        # layer (module docstring) — as each node's protected neighbors,
+        # stored from both ends; ``protected0`` lists them as pairs.
+        self.protected_nbrs: dict[int, set[int]] = {}
         # protected fan-in per node (children that picked it as parent):
         # capped at m so a hub's worst-case layer-0 degree stays bounded
         # (<= m0 unprotected + 1 own-parent + m protected children); a
@@ -155,6 +178,16 @@ class LocalHNSW:
         # padded per-layer adjacency for search_batch; None until first
         # use and after every graph change
         self._pad: list[np.ndarray] | None = None
+
+    @property
+    def protected0(self) -> set[tuple[int, int]]:
+        """The layer-0 parent edges as unordered ``(lo, hi)`` pairs."""
+        return {(a, b) for a, nbrs in self.protected_nbrs.items() for b in nbrs if a < b}
+
+    def _protect(self, a: int, b: int) -> None:
+        """Exempt the layer-0 edge pair ``a <-> b`` from trimming."""
+        self.protected_nbrs.setdefault(a, set()).add(b)
+        self.protected_nbrs.setdefault(b, set()).add(a)
 
     # -- distance: batch row-block vs one query ---------------------------
     def _dist(self, q: np.ndarray, idx: np.ndarray) -> np.ndarray:
@@ -228,7 +261,7 @@ class LocalHNSW:
         top = int(self.levels.max()) if n else 0
         self.adj = [dict() for _ in range(top + 1)]
         self.entry = 0
-        self.protected0 = set()
+        self.protected_nbrs = {}
         self.prot_fanin = {}
         self._pad = None
         for i in range(n):
@@ -241,9 +274,10 @@ class LocalHNSW:
         """Trim node ``c``'s adjacency to ~cap, never dropping a protected
         layer-0 parent edge (connectivity invariant, module docstring).
         Unprotected neighbors are kept nearest-first."""
-        if lv == 0 and self.protected0:
-            prot = [x for x in lst if (min(c, x), max(c, x)) in self.protected0]
-            free = [x for x in lst if (min(c, x), max(c, x)) not in self.protected0]
+        nbrs = self.protected_nbrs.get(c) if lv == 0 else None
+        if nbrs:
+            prot = [x for x in lst if x in nbrs]
+            free = [x for x in lst if x not in nbrs]
         else:
             prot, free = [], lst
         room = max(cap - len(prot), 0)
@@ -280,7 +314,7 @@ class LocalHNSW:
                     (c for c in chosen if self.prot_fanin.get(c, 0) < self.m),
                     chosen[0],
                 )
-                self.protected0.add((min(i, parent), max(i, parent)))
+                self._protect(i, parent)
                 self.prot_fanin[parent] = self.prot_fanin.get(parent, 0) + 1
             for c in chosen:
                 lst = self.adj[lv].setdefault(c, [])
@@ -505,16 +539,15 @@ class LocalHNSW:
         e_src: list[int] = []
         e_dst: list[int] = []
         e_prot: list[bool] = []
+        empty: set[int] = set()
         for layer, adj in enumerate(self.adj):
             for src in sorted(adj):
+                nbrs = self.protected_nbrs.get(src, empty) if layer == 0 else empty
                 for dst in adj[src]:
                     e_layer.append(layer)
                     e_src.append(src)
                     e_dst.append(dst)
-                    e_prot.append(
-                        layer == 0
-                        and (min(src, dst), max(src, dst)) in self.protected0
-                    )
+                    e_prot.append(dst in nbrs)
         return {
             "n": int(self.X.shape[0]),
             "dim": int(self.X.shape[1]) if self.X.size else 0,
@@ -556,9 +589,8 @@ class LocalHNSW:
             pa = np.asarray(e_prot, dtype=bool)
             sp = np.asarray(e_src, dtype=np.int64)[pa]
             dp = np.asarray(e_dst, dtype=np.int64)[pa]
-            idx.protected0 = {
-                (int(min(s, d)), int(max(s, d))) for s, d in zip(sp, dp)
-            }
+            for s, d in zip(sp.tolist(), dp.tolist()):
+                idx._protect(s, d)
             # parent of a pair is the LOWER index (parents are chosen
             # among already-inserted nodes, and insert order == row
             # order, also for insert_batch appends) — rebuild the fan-in
@@ -677,6 +709,19 @@ def _cell_topk(
     return _index_local(row).search_batch(Q, k, ef)
 
 
+def _on_cells(df: DataFrame, n_cells: int | None = None) -> DataFrame:
+    """``df`` hash-partitioned on ``cell`` into ``max(1, min(n_cells,
+    defaultParallelism))`` partitions (``defaultParallelism`` when the
+    cell count is unknown). The explicit count plans a
+    ``REPARTITION_BY_NUM`` exchange, which AQE does not coalesce: the
+    per-cell stage after it is CPU-bound Python while its shuffle is
+    small, and left to AQE a shuffle of a few MB becomes one task."""
+    parts = df.sparkSession.sparkContext.defaultParallelism
+    if n_cells is not None:
+        parts = min(n_cells, parts)
+    return df.repartition(max(1, parts), "cell")
+
+
 def hnsw_build(
     assigned: DataFrame,
     metric: str = "cosine",
@@ -691,11 +736,19 @@ def hnsw_build(
     `core/storage/engine.py:23-56` persists) in Spark-native form. Write
     the result to parquet (or ``.persist()`` it) and every subsequent
     :func:`hnsw_search` pays ZERO construction cost. Build is per-cell
-    inside ``applyInPandas`` — embarrassingly parallel, one shuffle on
-    cell id; deterministic for a fixed seed.
+    inside ``applyInPandas``, deterministic for a fixed seed, and
+    embarrassingly parallel: the rows are hash-partitioned on ``cell``
+    into ``defaultParallelism`` partitions (:func:`_on_cells`), the
+    only shuffle, so the cells are built on every core (left to AQE,
+    the ~1.5 MB shuffle of 3,000 64-d vectors is coalesced into one
+    partition, and one task builds every cell). The index is written
+    as one file per non-empty partition.
+
+    ``m < 2``, ``ef_construction < 1`` or a metric outside
+    :data:`~..functions.distance.METRICS` raise ``ValueError`` here, on
+    the driver.
     """
-    if m < 2:  # validate at the API edge, not deep inside an executor
-        raise ValueError(f"m must be >= 2, got {m}")
+    _check_build_params(m, ef_construction, metric)
     import pandas as pd
 
     from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
@@ -712,7 +765,7 @@ def hnsw_build(
         return pd.DataFrame([_index_row(key[0], pdf[id_col].to_numpy(), index)])
 
     return (
-        assigned.select("cell", id_col, vector_col)
+        _on_cells(assigned.select("cell", id_col, vector_col))
         .groupBy("cell")
         .applyInPandas(per_cell, INDEX_SCHEMA)
     )
@@ -742,13 +795,18 @@ def hnsw_insert(
     batched, parallel across cells, and lock-free, where the reference
     serializes every insert under one global lock.
 
+    Both sides of the cogroup are hash-partitioned on ``cell`` into
+    ``min(len(centroids), defaultParallelism)`` partitions
+    (:func:`_on_cells`), so the touched cells are rebuilt on every core
+    instead of in one AQE-coalesced task.
+
     Returns the new index DataFrame (same INDEX_SCHEMA); write it back to
     the index location to commit. Deterministic: level draws are seeded
     by (cell state size, batch), so re-running the same merge yields an
-    identical index.
+    identical index. Bad ``m``, ``ef_construction`` or ``metric`` raise
+    ``ValueError`` on the driver, as in :func:`hnsw_build`.
     """
-    if m < 2:  # validate at the API edge, not deep inside an executor
-        raise ValueError(f"m must be >= 2, got {m}")
+    _check_build_params(m, ef_construction, metric)
     import pandas as pd
 
     from hnsw_vector_db_spark.operators.similarity import assign_to_centroids
@@ -798,9 +856,10 @@ def hnsw_insert(
             cell = int(st["cell"])
         return pd.DataFrame([_index_row(cell, ids, local)])
 
+    n_cells = len(centroids)
     return (
-        index.groupBy("cell")
-        .cogroup(routed.groupBy("cell"))
+        _on_cells(index, n_cells).groupBy("cell")
+        .cogroup(_on_cells(routed, n_cells).groupBy("cell"))
         .applyInPandas(lambda ik, qk: per_cell(ik, qk), INDEX_SCHEMA)
     )
 
@@ -827,8 +886,7 @@ def hnsw_delete(
     Cells whose every vector is deleted disappear from the index (their
     row is dropped); searches simply never probe them.
     """
-    if m < 2:  # validate at the API edge, not deep inside an executor
-        raise ValueError(f"m must be >= 2, got {m}")
+    _check_build_params(m, ef_construction)
     import pandas as pd
 
     from hnsw_vector_db_spark.session import ensure_package_shipped, install_zip_guard
@@ -1079,10 +1137,10 @@ def hnsw_search(
 
     Partitioning: the probed index rows are hash-repartitioned on
     ``cell`` to ``max(1, min(probed cells, defaultParallelism))``
-    partitions and answered by one ``mapInPandas``; only the index rows
-    shuffle. AQE does not coalesce a repartition with an explicit
-    count, so the CPU-bound graph-kernel cells run on every core even
-    though their shuffle is small (left to AQE, a 2 MB shuffle became 2
+    partitions (:func:`_on_cells`) and answered by one ``mapInPandas``;
+    only the index rows shuffle. AQE does not coalesce a repartition
+    with an explicit count, so the CPU-bound graph-kernel cells run on
+    every core even though their shuffle is small (left to AQE, a 2 MB shuffle became 2
     tasks on 4 cores).
 
     Filtered ANN: ``allowed`` (a DataFrame of admissible ``id_col``
@@ -1133,7 +1191,6 @@ def hnsw_search(
     probed = np.unique(cells).tolist()
     qids = np.array([r[query_id_col] for r in qin], dtype=np.int64)
     bc = spark.sparkContext.broadcast((qids, Q.astype(np.float32), cells))
-    parts = max(1, min(len(probed), spark.sparkContext.defaultParallelism))
 
     # filtered search over-fetches per cell so enough admissible
     # candidates survive the post-traversal semi-join
@@ -1170,8 +1227,7 @@ def hnsw_search(
                 )
 
     candidates = (
-        index.filter(F.col("cell").isin(probed))
-        .repartition(parts, "cell")
+        _on_cells(index.filter(F.col("cell").isin(probed)), len(probed))
         .mapInPandas(per_cell, f"{query_id_col} long, {id_col} long, dist double")
     )
     if allowed is not None:

@@ -21,6 +21,30 @@ def sf_dir() -> str:
     return SF_SMOKE
 
 
+def _settled_in_group(spark, read):
+    """``run(group, action)``: run ``action`` under job group ``group``,
+    then return ``read(group)`` once the status store has settled."""
+    sc = spark.sparkContext
+
+    def run(group, action):
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        # the status store can trail the listener bus: read until it settles
+        n, prev = read(group), None
+        for _ in range(10):
+            if n == prev:
+                break
+            time.sleep(0.3)
+            n, prev = read(group), n
+        return n
+
+    return run
+
+
 @pytest.fixture
 def jobs_in_group(spark):
     """``jobs_in_group(group, action)`` runs ``action`` under job group
@@ -35,20 +59,23 @@ def jobs_in_group(spark):
         )
         return sum(1 for j in jobs if j.jobGroup().isDefined() and j.jobGroup().get() == group)
 
-    def run(group, action):
-        sc.setJobGroup(group, group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        jsc.listenerBus().waitUntilEmpty()
-        # the status store can trail the listener bus: read until it settles
-        n, prev = count(group), -1
-        for _ in range(10):
-            if n == prev:
-                break
-            time.sleep(0.3)
-            n, prev = count(group), n
-        return n
+    return _settled_in_group(spark, count)
 
-    return run
+
+@pytest.fixture
+def stage_tasks_in_group(spark):
+    """``stage_tasks_in_group(group, action)`` runs ``action`` under job
+    group ``group`` and returns ``{stage id: completed tasks}`` for every
+    stage of the group's jobs that ran tasks (a skipped stage ran none)."""
+    tracker = spark.sparkContext.statusTracker()
+
+    def tasks(group):
+        out = {}
+        for job in tracker.getJobIdsForGroup(group):
+            for sid in tracker.getJobInfo(job).stageIds:
+                info = tracker.getStageInfo(sid)
+                if info is not None and info.numCompletedTasks:
+                    out[sid] = info.numCompletedTasks
+        return out
+
+    return _settled_in_group(spark, tasks)

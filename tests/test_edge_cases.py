@@ -283,3 +283,53 @@ def test_hnsw_search_rejects_bad_parameters(spark, name):
     args = {"k": 2, "nprobe": 1, name: _BAD_SEARCH_ARGS[name]}
     with pytest.raises(ValueError, match=rf"\b{name}\b"):
         hnsw_search(index, queries, np.array([[0.5, 0.5, 0.5]]), metric="euclidean", **args)
+
+
+# ---------------------------------------------------------------------------
+# graph-build parameters: an ef_construction below 1 or an unknown metric
+# raise ValueError naming the parameter on the driver, not inside a worker
+
+
+def _local_hnsw(spark, **bad):
+    from hnsw_vector_db_spark.operators.hnsw_partition import LocalHNSW
+
+    LocalHNSW(**bad)
+
+
+def _build_with(spark, **bad):
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build
+
+    hnsw_build(_good_corpus(spark).withColumn("cell", F.lit(0)), **bad)
+
+
+def _insert_with(spark, **bad):
+    import numpy as np
+
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_build, hnsw_insert
+
+    index = hnsw_build(_good_corpus(spark).withColumn("cell", F.lit(0)), metric="euclidean")
+    hnsw_insert(index, _good_corpus(spark), np.array([[0.5, 0.5, 0.5]]), **bad)
+
+
+_BUILD_SITES = {"LocalHNSW": _local_hnsw, "hnsw_build": _build_with, "hnsw_insert": _insert_with}
+_BAD_BUILD_ARGS = {"ef_construction": 0, "metric": "cosin"}
+
+
+@pytest.mark.parametrize("name", sorted(_BAD_BUILD_ARGS))
+@pytest.mark.parametrize("site", sorted(_BUILD_SITES))
+def test_hnsw_build_rejects_bad_parameters(spark, site, name):
+    """ef_construction=0 used to die in a Python worker with an
+    IndexError (an insert's beam held no candidate) and metric="cosin"
+    silently built a euclidean graph."""
+    with pytest.raises(ValueError, match=rf"\b{name}\b"):
+        _BUILD_SITES[site](spark, **{name: _BAD_BUILD_ARGS[name]})
+
+
+def test_local_hnsw_accepts_every_known_metric():
+    """squared_euclidean stays accepted: a VectorTable may carry it into
+    build_index."""
+    from hnsw_vector_db_spark.functions.distance import METRICS
+    from hnsw_vector_db_spark.operators.hnsw_partition import LocalHNSW
+
+    for metric in METRICS:
+        assert LocalHNSW(ef_construction=1, metric=metric).metric == metric

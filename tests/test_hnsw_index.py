@@ -193,6 +193,118 @@ def test_hnsw_build_warns_nothing_about_type_hints(fitted):
     assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
 
 
+def _cells_frame(spark, n_cells, per_cell=6, dim=8, seed=5):
+    """An ``assigned`` frame of ``n_cells`` cells of ``per_cell`` random
+    vectors each; ids are not in cell order."""
+    rng = np.random.RandomState(seed)
+    rows = [
+        (c, (c * 7919 + i * 104729) % 1_000_003, rng.randn(dim).tolist())
+        for c in range(n_cells)
+        for i in range(per_cell)
+    ]
+    return spark.createDataFrame(rows, "cell int, vec_id long, embedding array<double>")
+
+
+def _cell_exchanges(plan: str, op: str) -> str:
+    """The executed plan below ``op``, the per-cell operator."""
+    final = plan.split("== Initial Plan ==")[0]
+    return final[final.index(op):]
+
+
+def test_hnsw_build_cells_run_at_full_parallelism(spark, stage_tasks_in_group):
+    """The build's rows are hash-partitioned on cell to defaultParallelism
+    partitions and AQE leaves that count alone: below the per-cell
+    FlatMapGroupsInPandas there is exactly one exchange, that
+    repartition, and no coalesced shuffle read, so the build stage runs
+    min(cells, defaultParallelism) tasks (left to AQE it ran as one)."""
+    import re
+
+    from hnsw_vector_db_spark.plans.explain import physical_plan
+
+    parts = spark.sparkContext.defaultParallelism
+    n_cells = parts + 3
+    built = hnsw_build(_cells_frame(spark, n_cells), metric="euclidean")
+    rows = []
+    tasks = stage_tasks_in_group("hnsw-build", lambda: rows.extend(built.collect()))
+    assert sorted(r["cell"] for r in rows) == list(range(n_cells))
+    cells = _cell_exchanges(physical_plan(built), "FlatMapGroupsInPandas")
+    exchanges = re.findall(r"Exchange (\w+)\((\w+)#\d+, (\d+)\), (\w+)", cells)
+    assert exchanges == [("hashpartitioning", "cell", str(parts), "REPARTITION_BY_NUM")], cells
+    assert cells.count("Exchange") == 1, cells
+    assert "AQEShuffleRead" not in cells, cells
+    assert tasks[max(tasks)] == min(n_cells, parts), tasks  # the last stage builds
+
+
+def test_hnsw_insert_cogroup_runs_at_full_parallelism(spark, fitted, stage_tasks_in_group):
+    """Both sides of hnsw_insert's cogroup are repartitioned on cell to
+    min(cells, defaultParallelism) partitions, the same count, so the
+    cogroup plans no exchange on cell of its own and its stage runs that
+    many tasks (left to AQE it ran as one)."""
+    import re
+
+    from hnsw_vector_db_spark.operators.hnsw_partition import hnsw_insert
+    from hnsw_vector_db_spark.plans.explain import physical_plan
+
+    assigned, centroids, _ = fitted
+    parts = min(len(centroids), spark.sparkContext.defaultParallelism)
+    index = hnsw_build(assigned).localCheckpoint()
+    merged = hnsw_insert(index, assigned.limit(3).select("vec_id", "embedding"), centroids)
+    rows = []
+    tasks = stage_tasks_in_group("hnsw-insert", lambda: rows.extend(merged.collect()))
+    assert len(rows) == index.count()
+    cells = _cell_exchanges(physical_plan(merged), "FlatMapCoGroupsInPandas")
+    on_cell = [e for e in re.findall(r"Exchange (\w+)\((\w+)#\d+, (\d+)\), (\w+)", cells)
+               if e[1] == "cell"]
+    assert on_cell == [("hashpartitioning", "cell", str(parts), "REPARTITION_BY_NUM")] * 2, cells
+    assert tasks[max(tasks)] == parts, tasks  # the last stage merges
+
+
+@pytest.mark.parametrize("metric", ["cosine", "dot_product", "euclidean", "manhattan"])
+def test_hnsw_build_rows_equal_a_local_build(spark, metric):
+    """Each distributed index row is the row an in-process
+    LocalHNSW.build of that cell's vectors, in the row's node order,
+    gives: placing cells on tasks changes no byte."""
+    assigned = _cells_frame(spark, spark.sparkContext.defaultParallelism + 1, per_cell=40)
+    vec = {r["vec_id"]: r["embedding"] for r in assigned.collect()}
+    rows = hnsw_build(assigned, metric=metric, m=4, ef_construction=16).collect()
+    assert len(rows) == spark.sparkContext.defaultParallelism + 1
+    for row in rows:
+        local = LocalHNSW(m=4, ef_construction=16, metric=metric, seed=0)
+        local.build(np.array([vec[i] for i in row["ids"]], dtype=np.float64))
+        assert row.asDict() == _index_row(row["cell"], row["ids"], local), row["cell"]
+
+
+def test_protected_neighbours_are_protected0():
+    """The trim-exempt parent edges are kept once, as each node's
+    protected neighbours; after a build, a state round trip and an
+    insert_batch on the reloaded graph they are exactly what protected0
+    lists, from both ends, a spanning tree that no trim dropped, and
+    prot_fanin counts each node's protected neighbours above it."""
+    rng = np.random.RandomState(13)
+    X = rng.randn(300, 8)
+
+    def check(idx):
+        want: dict[int, set[int]] = {}
+        for a, b in idx.protected0:
+            want.setdefault(a, set()).add(b)
+            want.setdefault(b, set()).add(a)
+        assert idx.protected_nbrs == want
+        assert len(idx.protected0) == len(idx.X) - 1  # one parent per non-root node
+        for a, nbrs in want.items():
+            assert nbrs <= set(idx.adj[0][a])
+        fanin = {a: sum(b > a for b in nbrs) for a, nbrs in want.items()}
+        assert idx.prot_fanin == {a: f for a, f in fanin.items() if f}
+
+    built = LocalHNSW(m=3, ef_construction=16, metric="euclidean", seed=0)
+    built.build(X)
+    check(built)
+    loaded = _index_local(_index_row(0, np.arange(len(X)), built))
+    assert loaded.protected0 == built.protected0
+    check(loaded)
+    loaded.insert_batch(rng.randn(40, 8))
+    check(loaded)
+
+
 def test_hnsw_search_cells_run_at_full_parallelism(spark, fitted, tmp_path):
     """The probed index rows are repartitioned on cell to min(probed
     cells, defaultParallelism) partitions, and AQE leaves that count
